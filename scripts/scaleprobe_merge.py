@@ -66,13 +66,6 @@ def main(out, logs):
                           if t_of(m0) and t_of(mN) else None)
         entry["alpha"] = expo(m0, mN)
         entry["alpha_tail"] = expo(mT, mN)
-        # statec_* cells are CADENCE measurements (50 fixed-delta
-        # maintenance cycles; rows = files on disk at the end), not a
-        # data-scaling series -- their null ratio/alpha is by design,
-        # and the explicit metric kind tells cross-cell tooling to
-        # skip them deliberately (round-15 verdict item 5)
-        if n.startswith("statec_"):
-            entry["metric"] = "cadence"
         queries[n] = entry
     doc = {"probe": "scale", "base": "/root/testdata/sf0.1",
            "scales": scales,

@@ -102,10 +102,9 @@ object OptProbe {
           jobs.set(0); stages.set(0); tasks.set(0)
           df.write.format("noop").mode("overwrite").save()
           val t2 = System.nanoTime()
-          // listener events are async (bus latency is ms-scale; the
-          // last JobStart was posted before its job completed, so a
-          // short drain is enough for counting purposes)
-          Thread.sleep(100)
+          // listener events are async: wait until every event posted
+          // so far (all of this query's JobStarts) has been counted
+          org.apache.spark.sql.graft.shim.drainListenerBus(spark)
           println(f"[optprobe] $name%-44s ${(t1 - t0) / 1e9}%7.3f " +
             f"${(t2 - t1) / 1e9}%7.3f ${jobs.get}%4d ${stages.get}%5d " +
             f"${tasks.get}%6d")
@@ -227,7 +226,7 @@ object OptProbe {
           rowsPerBand = 3), Seq("bk"))
       time("q257 s2: upsertPostingsIndex")(index1)
       val clusters1 = Dedup.upsertClusters(clusters0, newPairs,
-        batch.select("doc_id"), "doc_id")
+        batch.select("doc_id"), "doc_id", ordered = false)
       time("q257 s2: upsertClusters")(clusters1)
       val pairs1 = pairs0.select(col("id_a"), col("id_b"))
         .unionByName(newPairs)
@@ -240,7 +239,7 @@ object OptProbe {
           numHashes = 12, rowsPerBand = 3), Seq("bk"))
       time("q257 s3: retractPostingsIndex")(index2)
       val clusters2 = Dedup.retractClusters(clusters1, pairs1, deleted,
-        "doc_id")
+        "doc_id", ordered = false)
       time("q257 s3: retractClusters")(clusters2)
       val peers = ExtQueries.postingPeers(index2, "doc_id")
       time("q257 s4: postingPeers")(peers)
@@ -275,7 +274,7 @@ object OptProbe {
         Seq("sl", "sv"))
       time("q260 s2: upsertPostingsIndex")(index1)
       val clusters1 = Dedup.upsertClusters(clusters0, newPairs,
-        batchFps.select("pid"), "pid")
+        batchFps.select("pid"), "pid", ordered = false)
       time("q260 s2: upsertClusters")(clusters1)
       val pairs1 = pairs0.select(col("id_a"), col("id_b"))
         .unionByName(newPairs)
@@ -288,7 +287,7 @@ object OptProbe {
           bits = 32, slices = 4), Seq("sl", "sv"))
       time("q260 s3: retractPostingsIndex")(index2)
       val clusters2 = Dedup.retractClusters(clusters1, pairs1, deleted,
-        "pid")
+        "pid", ordered = false)
       time("q260 s3: retractClusters")(clusters2)
       val peers = ExtQueries.postingPeers(index2, "pid")
       time("q260 s4: postingPeers")(peers)
@@ -318,7 +317,7 @@ object OptProbe {
         "text", k, cap)
       time("q248 s2: upsertShingleIndex")(index1)
       val clusters1 = Dedup.upsertClusters(clusters0, newPairs,
-        batch.select("doc_id"), "doc_id")
+        batch.select("doc_id"), "doc_id", ordered = false)
       time("q248 s2: upsertClusters")(clusters1)
       val pairs1 = pairs0.unionByName(newPairs)
       val deleted = docs.filter(col("doc_id") % 7 === 2)
@@ -326,7 +325,7 @@ object OptProbe {
         "text", k, cap)
       time("q248 s3: retractShingleIndex")(index2)
       val clusters2 = Dedup.retractClusters(clusters1, pairs1,
-        deleted.select("doc_id"), "doc_id")
+        deleted.select("doc_id"), "doc_id", ordered = false)
       time("q248 s3: retractClusters")(clusters2)
       val nLive = index2.select(explode(col("cpids")).as("doc_id"))
         .groupBy("doc_id").agg(count(lit(1)).as("n_live_sh"))

@@ -470,405 +470,14 @@ object ScaleProbe {
         threshold = 0.25, bits = 16, tables = 4)
     })
 
-  /** PARTITIONED-STATE cells (round-12 verdict item 3): measure the
-    * bucket-pruned maintenance forms against the full-rewrite forms,
-    * state held at scale (rows ∝ m), delta held CONSTANT — the
-    * production recrawl shape. The state is SYNTHETIC (spark.range):
-    * a banded posting index of m·1M singleton-list keys and a cluster
-    * table of m·1M singleton rows, because the real 32-bit blockhash
-    * index is KEY-SPACE-BOUNDED (4 slices × 256 slice values = ≤1024
-    * rows no matter the corpus — a first probe run measured its full
-    * rewrite flat at ~0.4 s to ×30, which says "widen the fingerprint
-    * with the corpus", the q250x dial, not "partitioning wins").
-    * Deltas: 32 fixed keys (upsert merges new pids in; retract empties
-    * exactly those keys) and 8 fixed cluster merges — identical at
-    * every scale, ids chosen inside the ×1 key space so they exist at
-    * all scales.
-    *
-    * Protocol: one pristine state build per scale, memoized under
-    * `_STATE_OK` (the probe's min-of-two sampling then reports
-    * maintenance-only cost — sample 1 pays the build); full-rewrite
-    * comparators read the plain-parquet state and write their merge to
-    * scratch (the honest read-everything-write-everything cost, input
-    * never mutated); partitioned cells RESET to snapshot v1 via
-    * [[graft.ext.StateStore.rollbackTo]] at sample start (manifest
-    * deletes + vacuum — the cheap direction of immutable generations),
-    * so every sample runs against identical state.
-    *
-    * Expected laws, written down BEFORE measurement: full rewrite
-    * reads+writes ∝ m. The partitioned form reads+writes only the
-    * delta's buckets — touched-bucket COUNT is delta-bounded and flat
-    * (the `rows` column records it), but at FIXED numBuckets (256)
-    * each bucket's volume grows ∝ m, so partitioned cost is ∝ m with a
-    * ≈ NB/touched constant-factor win over full; holding PER-BUCKET
-    * volume constant (numBuckets ∝ corpus — the production dial, the
-    * same occupancy-normalized law as q245x/q250x) is what makes
-    * maintenance flat. There is also a fixed per-cycle protocol
-    * overhead (manifest IO, commit, audits — a dozen small Spark jobs)
-    * that dominates BELOW a state-size crossover; whatever the numbers
-    * say about where that crossover sits goes in docs/SCALE.md. */
-  private val StNb = 256
-  private val StRows = 1000000L // per ×1 replica
-
-  private def rmrf(s: SparkSession, dir: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) { fs.delete(p, true); () }
-  }
-
-  /** The constant deltas: 32 posting keys / 8 cluster merges, all
-    * inside the ×1 key space (31337 is odd ⇒ no collisions mod 1M
-    * among 32 multiples; new ids start at 10⁹ ≫ any scale's ids). */
-  private def deltaKeys: Seq[Long] =
-    (0 until 32).map(j => j * 31337L % StRows)
-
-  /** Build (once per scale) the pristine synthetic states + deltas —
-    * marker-memoized like the fixture generators. */
-  private def ensureState(s: SparkSession, root: String, m: Int)
-      : Unit = {
-    val ok = new java.io.File(s"$root/_STATE_OK")
-    if (ok.exists()) return
-    rmrf(s, root)
-    new java.io.File(root).mkdirs()
-    import s.implicits._
-    // banded posting index: key → [key] (one posting per key — the
-    // realistic production shape where a fingerprint at honest width
-    // has ~one key per doc)
-    val idx = s.range(m * StRows)
-      .select(col("id").as("bk"), array(col("id")).as("cpids"))
-    idx.write.parquet(s"$root/post_full")
-    Dedup.writePostingsIndexPartitioned(s.read.parquet(s"$root/post_full"),
-      s"$root/post_part", Seq("bk"), StNb)
-    // constant deltas
-    deltaKeys.map(k => (k, 1000000000L + k)).toDF("bk", "pid")
-      .write.parquet(s"$root/post_up")
-    deltaKeys.map(k => (k, k)).toDF("bk", "pid")
-      .write.parquet(s"$root/post_del")
-    // cluster table: m·1M singletons
-    val clusters0 = s.range(m * StRows)
-      .select(col("id"), col("id").as("cluster"))
-    clusters0.write.parquet(s"$root/clu_full")
-    Dedup.writeClustersPartitioned(s.read.parquet(s"$root/clu_full"),
-      s"$root/clu_part", "id", StNb)
-    deltaKeys.take(8).map(k => (1000000000L + k, k))
-      .toDF("id_a", "id_b").write.parquet(s"$root/clu_pairs")
-    deltaKeys.take(8).map(k => 1000000000L + k).toDF("id")
-      .write.parquet(s"$root/clu_ids")
-    ok.createNewFile()
-    ()
-  }
-
-  private def resetPart(s: SparkSession, root: String): Unit =
-    if (graft.ext.StateStore.current(s, root).version != 1L)
-      graft.ext.StateStore.rollbackTo(s, root, 1L)
-
   /** Release every cached/checkpointed block — the measurement-loop
-    * cleanup (`run()`'s finally), needed by ANY code that drives
-    * maintenance cycles outside `timed`: each cycle's eager
-    * localCheckpoint memos otherwise accumulate for the whole run
-    * (measured: the 50-cycle cadence crawled to ~30 s/cycle from
-    * leaked blocks before this was applied there). */
+    * cleanup (`run()`'s finally and the untimed row-count pass): each
+    * query's eager localCheckpoint memos would otherwise accumulate
+    * for the whole run and pollute later samples. */
   private def releaseBlocks(s: SparkSession): Unit = {
     s.sharedState.cacheManager.clearCache()
     s.sparkContext.getPersistentRDDs.values
       .foreach(_.unpersist(blocking = true))
-  }
-
-  /** Untimed per-sample SETUP of the partitioned-state cells: the
-    * snapshot reset (rollbackTo + vacuum — several driver-side FS
-    * operations) runs OUTSIDE the timed region, so statep_* samples
-    * time exactly one maintenance cycle, comparable to the statef_*
-    * comparators which carry no reset (round-13 advice: the in-sample
-    * reset biased the partitioned cells' fixed overhead upward). */
-  private def stateSetups(out: String, m: Int)
-      : Map[String, SparkSession => Unit] = {
-    def setup(store: String)(s: SparkSession): Unit = {
-      val root = s"$out/state/x$m"
-      ensureState(s, root, m)
-      resetPart(s, s"$root/$store")
-    }
-    Map(
-      "statep_post_upsert" -> setup("post_part") _,
-      "statep_post_retract" -> setup("post_part") _,
-      "statep_clu_upsert" -> setup("clu_part") _)
-  }
-
-  private def stateProbes(out: String, m: Int)
-      : Seq[(String, (SparkSession, String) => DataFrame)] = {
-    def withState(s: SparkSession): String = {
-      val root = s"$out/state/x$m"; ensureState(s, root, m); root
-    }
-    Seq(
-      "statef_post_upsert" -> { (s: SparkSession, _: String) =>
-        val r = withState(s)
-        Dedup.upsertPostingsIndex(s.read.parquet(s"$r/post_full"),
-            s.read.parquet(s"$r/post_up"), Seq("bk"))
-          .write.mode("overwrite").parquet(s"$r/scratch_pu")
-        s.range(1).toDF()
-      },
-      "statep_post_upsert" -> { (s: SparkSession, _: String) =>
-        val r = withState(s) // reset happens in the untimed setup hook
-        val touched = Dedup.upsertPostingsIndexPartitioned(
-          s"$r/post_part", s.read.parquet(s"$r/post_up"),
-          Seq("bk"), StNb)
-        s.range(touched.size.toLong).toDF() // rows = touched buckets
-      },
-      "statef_post_retract" -> { (s: SparkSession, _: String) =>
-        val r = withState(s)
-        Dedup.retractPostingsIndex(s.read.parquet(s"$r/post_full"),
-            s.read.parquet(s"$r/post_del"), Seq("bk"))
-          .write.mode("overwrite").parquet(s"$r/scratch_pr")
-        s.range(1).toDF()
-      },
-      "statep_post_retract" -> { (s: SparkSession, _: String) =>
-        val r = withState(s)
-        val touched = Dedup.retractPostingsIndexPartitioned(
-          s"$r/post_part", s.read.parquet(s"$r/post_del"),
-          Seq("bk"), StNb)
-        s.range(touched.size.toLong).toDF()
-      },
-      "statef_clu_upsert" -> { (s: SparkSession, _: String) =>
-        val r = withState(s)
-        Dedup.upsertClusters(s.read.parquet(s"$r/clu_full"),
-            s.read.parquet(s"$r/clu_pairs"),
-            s.read.parquet(s"$r/clu_ids"), "id")
-          .write.mode("overwrite").parquet(s"$r/scratch_cu")
-        s.range(1).toDF()
-      },
-      "statep_clu_upsert" -> { (s: SparkSession, _: String) =>
-        val r = withState(s)
-        val rep = Dedup.upsertClustersPartitioned(s"$r/clu_part",
-          s.read.parquet(s"$r/clu_pairs"),
-          s.read.parquet(s"$r/clu_ids"), "id", StNb)
-        s.range(rep.touched.size.toLong).toDF()
-      })
-  }
-
-  /** COMMIT-PROTOCOL BREAKDOWN cells (round-13 verdict item 6): one
-    * instrumented partitioned maintenance cycle per sample, decomposed
-    * through [[graft.ext.StateStore.Timing]] into
-    *
-    *  - `manifest_read`  — every [[graft.ext.StateStore.current]]
-    *    resolution the cycle makes (requireNumBuckets, the pruned
-    *    reads' manifest lookups, commit's own);
-    *  - `gen_write`      — the Spark job writing the fresh generation,
-    *    which FUSES the pruned probe read and the merge (the
-    *    data-dependent phase);
-    *  - `publish`        — manifest serialize + hsync + atomic swap;
-    *  - `residual`       — everything else: delta prep + its eager
-    *    checkpoint, touched-bucket collects, post-commit audits.
-    *
-    * The fixed protocol overhead is manifest_read + publish (+ the
-    * audit part of residual); gen_write is what scales with bucket
-    * volume — the split docs/SCALE.md uses to state what the ×1
-    * constant cost buys and when it is paid back. Emits merge-script-
-    * format `[probe]` lines; excluded from the single-run JSON (the
-    * committed artifact is the multi-run merge). */
-  private def runBreakdown(s: SparkSession, out: String, m: Int): Unit = {
-    val root = s"$out/state/x$m"
-    ensureState(s, root, m)
-    val T = graft.ext.StateStore.Timing
-    def cycle(store: String, run: () => Unit): Map[String, Double] = {
-      resetPart(s, s"$root/$store") // untimed, like the statep_* setup
-      releaseBlocks(s) // leaked checkpoints would pollute later cells
-      T.reset()
-      val t0 = System.nanoTime()
-      run()
-      val total = (System.nanoTime() - t0) / 1e9
-      val (mr, gw, pb) =
-        (T.currentSec.sum(), T.writeSec.sum(), T.publishSec.sum())
-      Map("total" -> total, "manifest_read" -> mr, "gen_write" -> gw,
-        "publish" -> pb, "residual" -> (total - mr - gw - pb))
-    }
-    val upCycle = () => {
-      Dedup.upsertPostingsIndexPartitioned(s"$root/post_part",
-        s.read.parquet(s"$root/post_up"), Seq("bk"), StNb)
-      ()
-    }
-    // guard=None runs under whatever is installed (the default rename
-    // guard). The `stateb_upcas` twin re-measures the SAME cycle under
-    // [[graft.ext.StateStore.CasCommitGuard]] (round-15 verdict item
-    // 3): it is the commit point a real object-store deployment runs,
-    // and it streams the manifest body TWICE (read tmp + write dst)
-    // where the rename guard moves a name — the cell says whether
-    // publish stays ~flat under that shape.
-    val cells = Seq(
-      ("stateb_up", "post_part", upCycle, None),
-      ("stateb_upcas", "post_part", upCycle,
-        Some(graft.ext.StateStore.CasCommitGuard)),
-      ("stateb_clu", "clu_part", () => {
-        Dedup.upsertClustersPartitioned(s"$root/clu_part",
-          s.read.parquet(s"$root/clu_pairs"),
-          s.read.parquet(s"$root/clu_ids"), "id", StNb)
-        ()
-      }, None))
-    cells.foreach { case (name, store, run, guard) =>
-      val prev = guard.map(graft.ext.StateStore.setCommitGuard)
-      try {
-        val s1 = cycle(store, run)
-        val s2 = cycle(store, run)
-        Seq("total", "manifest_read", "gen_write", "publish", "residual")
-          .foreach { p =>
-            System.err.println(f"[probe] x$m ${s"${name}_$p"}%-24s " +
-              f"t1=${s1(p)}%7.2f t2=${s2(p)}%7.2f rows=${-1L}%9d")
-          }
-      } finally {
-        prev.foreach(graft.ext.StateStore.setCommitGuard)
-        ()
-      }
-    }
-  }
-
-  /** COMPACTION-CADENCE cells (round-13 verdict item 5): 50
-    * maintenance cycles against a FRESH partitioned postings store —
-    * the same constant 32-key delta every cycle, the hot-bucket
-    * recrawl shape — run twice: once with NO housekeeping (generations
-    * and manifests accrue unboundedly) and once with the operational
-    * cadence (every 10 cycles: [[graft.ext.StateStore.compactBuckets]]
-    * over the touched buckets + vacuum). Per-cycle accrual curves go
-    * to stderr as `[probeops]` lines (manifest count, generation-dir
-    * count, parquet files on disk, current-snapshot files); the
-    * summary `[probe]` line carries total seconds and rows = parquet
-    * files ON DISK at the end — the unbounded-vs-bounded headline. */
-  private def runCompactCells(s: SparkSession, out: String, m: Int)
-      : Unit = {
-    val root = s"$out/state/x$m"
-    ensureState(s, root, m)
-    // stats via java.nio, NOT the Hadoop FS: the located-status
-    // recursive listing cost ~28 s per cycle over ~8k local files and
-    // dwarfed the ~1 s maintenance cycle it was annotating (this probe
-    // is local-only; the engine itself never lists recursively)
-    def diskStats(path: String): (Int, Int, Int) = {
-      import java.nio.file.{Files, Paths}
-      import scala.jdk.CollectionConverters._
-      val ls = Files.list(Paths.get(path))
-      val top =
-        try ls.iterator().asScala.map(_.getFileName.toString).toSeq
-        finally ls.close()
-      val manifests = top.count(n =>
-        n.startsWith("manifest-") && n.endsWith(".txt"))
-      val gens = top.count(_.startsWith("gen-"))
-      val walk = Files.walk(Paths.get(path))
-      val files =
-        try walk.iterator().asScala
-          .count(_.getFileName.toString.endsWith(".parquet"))
-        finally walk.close()
-      (manifests, gens, files)
-    }
-    def curFiles(path: String): Map[Int, Int] = {
-      import java.nio.file.{Files, Paths}
-      import scala.jdk.CollectionConverters._
-      val cur = graft.ext.StateStore.current(s, path)
-      cur.buckets(graft.ext.StateStore.T).map { case (b, gen) =>
-        val dir = Paths.get(path, gen, graft.ext.StateStore.T,
-          s"pbucket=$b")
-        val ls = Files.list(dir)
-        val n =
-          try ls.iterator().asScala
-            .count(_.getFileName.toString.endsWith(".parquet"))
-          finally ls.close()
-        b -> n
-      }
-    }
-    def variant(name: String, compactEvery: Int,
-        policy: Option[graft.ext.StateStore.MaintenancePolicy] = None)
-        : Unit = {
-      val path = s"$root/cadence_$name"
-      rmrf(s, path)
-      Dedup.writePostingsIndexPartitioned(
-        s.read.parquet(s"$root/post_full"), path, Seq("bk"), StNb)
-      val delta = s.read.parquet(s"$root/post_up")
-      // the auto variant hands housekeeping to the store's own policy
-      // (round-14 verdict item 3): NOTHING in this loop schedules
-      // compaction or vacuum — bounded accrual must come from the
-      // policy firing inside commit, or the cell fails its point
-      val prevPolicy = policy.map(p =>
-        graft.ext.StateStore.setMaintenancePolicy(Some(p)))
-      try {
-      val t0 = System.nanoTime()
-      var touched = Set.empty[Int]
-      var maintSec = 0.0 // upserts + compaction ONLY — the summary
-      // line must not charge the per-cycle stats collection (walk +
-      // 256 listings), whose cost GROWS with the accrued file count
-      // and would bias the nocompact-vs-compact comparison the cell
-      // exists to make (review finding)
-      (1 to 50).foreach { c =>
-        val tu0 = System.nanoTime()
-        touched ++= Dedup.upsertPostingsIndexPartitioned(path, delta,
-          Seq("bk"), StNb)
-        val upSec = (System.nanoTime() - tu0) / 1e9
-        val tc0 = System.nanoTime()
-        if (compactEvery > 0 && c % compactEvery == 0) {
-          graft.ext.StateStore.compactBuckets(s, path, touched.toSeq)
-          graft.ext.StateStore.vacuum(s, path)
-          ()
-        }
-        val cpSec = (System.nanoTime() - tc0) / 1e9
-        maintSec += upSec + cpSec
-        releaseBlocks(s) // drop the cycle's checkpoint memos (leaked
-                         // blocks measurably throttled later cycles)
-        val (mf, gn, df) = diskStats(path)
-        val cur = curFiles(path)
-        System.err.println(f"[probeops] x$m statec_$name cycle=$c%2d " +
-          f"sec=${(System.nanoTime() - t0) / 1e9}%7.2f " +
-          f"up=$upSec%6.2f comp=$cpSec%6.2f " +
-          f"manifests=$mf%3d gens=$gn%3d disk_files=$df%5d " +
-          f"cur_files=${cur.values.sum}%4d " +
-          f"hot_bucket_files=${cur.values.max}%3d")
-      }
-      val total = (System.nanoTime() - t0) / 1e9
-      val (_, _, df) = diskStats(path)
-      System.err.println(f"[probeops] x$m statec_$name " +
-        f"wall=$total%7.2f maint=$maintSec%7.2f " +
-        "(wall - maint = stats collection)")
-      // TWO cells per variant so the merged artifact is explicit
-      // about metric kind (round-14 advice: statec t1 was
-      // maintenance-only while every other cell's t1 is wall-clock,
-      // with nothing in the committed JSON saying so): `statec_<v>`
-      // keeps the r14 maintenance-only semantics for cross-round
-      // comparability, `statec_<v>_wall` carries the wall-clock total
-      // (maintenance + per-cycle stats collection)
-      System.err.println(f"[probe] x$m ${s"statec_$name"}%-24s " +
-        f"t1=$maintSec%7.2f t2=${-1.0}%7.2f rows=${df.toLong}%9d")
-      System.err.println(f"[probe] x$m ${s"statec_${name}_wall"}%-24s " +
-        f"t1=$total%7.2f t2=${-1.0}%7.2f rows=${df.toLong}%9d")
-      } finally prevPolicy.foreach(prev =>
-        graft.ext.StateStore.setMaintenancePolicy(prev))
-    }
-    // variant subset knob (round-17 verdict item 4's ×30 decade
-    // re-measure needs only the unattended-policy pair — nocompact at
-    // ×30 would re-pay the unbounded-accrual worst case the committed
-    // ×1/×10 cells already adjudicate)
-    val variants = sys.env.getOrElse(
-        "SPARK_GRAFT_PROBE_COMPACT_VARIANTS",
-        "nocompact,compact10,auto,auto_cas")
-      .split(",").map(_.trim).toSet
-    if (variants("nocompact")) variant("nocompact", 0)
-    if (variants("compact10")) variant("compact10", 10)
-    // the un-hand-scheduled cadence: the store's own policy must bound
-    // accrual on its own (dials ≈ the measured every-10 cadence: at
-    // one generation per cycle, re-home fires roughly every 5 cycles)
-    if (variants("auto"))
-      variant("auto", 0, Some(graft.ext.StateStore.MaintenancePolicy(
-        maxGenerations = 10, maxManifests = 16)))
-    // round-16 verdict item 4: the SAME unattended-policy cadence
-    // under the CAS commit guard — the stateb_upcas breakdown cells
-    // measured its per-commit publish flat, but its copy-shaped
-    // publish (read tmp + write dst, no rename) is the one that
-    // matters ACCRUED over 50 cycles on an object store; this cell
-    // says whether file accrual and maintenance time match the
-    // rename-guard cadence
-    if (variants("auto_cas")) {
-      val prev = graft.ext.StateStore.setCommitGuard(
-        graft.ext.StateStore.CasCommitGuard)
-      try variant("auto_cas", 0,
-        Some(graft.ext.StateStore.MaintenancePolicy(
-          maxGenerations = 10, maxManifests = 16)))
-      finally {
-        graft.ext.StateStore.setCommitGuard(prev)
-        ()
-      }
-    }
   }
 
   def main(args: Array[String]): Unit = {
@@ -908,30 +517,22 @@ object ScaleProbe {
 
     val byName = SparkEntry.queries
     val owners = ExtQueries.sharedScratchOwners
-    // which cell families to run: "dense" (the round-11 set), "sparse"
-    // (the planted-fixture set), or "all". A sparse-only run neither
-    // generates nor touches the dense blow-ups (and vice versa), so
-    // adding a regime never forces re-measuring the other's committed
-    // exponents.
-    // comma-separated set; "all" = the r11-r13 trio (dense, sparse,
-    // state — the committed-exponent cells). The round-14 longitudinal
-    // cells (compact, breakdown) are opt-in: they measure cadence and
-    // protocol phases, not data-scaling exponents
+    // which cell families to run, as a comma-separated set: "dense"
+    // (the round-11 set), "sparse" (the planted-fixture set),
+    // "densechain", or "all" (= dense + sparse, the committed-exponent
+    // cells). A sparse-only run neither generates nor touches the
+    // dense blow-ups (and vice versa), so adding a regime never forces
+    // re-measuring the other's committed exponents.
     val cellSet = sys.env.getOrElse("SPARK_GRAFT_PROBE_CELLS", "all")
       .split(",").map(_.trim).toSet
-    val known = Set("dense", "sparse", "state", "compact", "breakdown",
-      "densechain", "all")
+    val known = Set("dense", "sparse", "densechain", "all")
     require(cellSet.nonEmpty && cellSet.subsetOf(known),
       "SPARK_GRAFT_PROBE_CELLS must be a comma-separated subset of " +
-        s"dense|sparse|state|compact|breakdown|densechain|all, got " +
-        cellSet.toString)
+        s"dense|sparse|densechain|all, got " + cellSet.toString)
     val withDense = cellSet("dense") || cellSet("all")
     val withSparse = cellSet("sparse") || cellSet("all")
-    val withState = cellSet("state") || cellSet("all")
-    val withCompact = cellSet("compact")
-    val withBreakdown = cellSet("breakdown")
-    // opt-in, like compact/breakdown: the dense chain's pair graph
-    // grows ~m², so it must never ride into a multi-scale "all" run
+    // opt-in: the dense chain's pair graph grows ~m², so it must never
+    // ride into a multi-scale "all" run
     val withDenseChain = cellSet("densechain")
 
     val dirs =
@@ -961,11 +562,7 @@ object ScaleProbe {
         if (withDenseChain)
           denseChainProbes(m).map { case (n, f) => (n, f, dirs(m)) }
         else Nil
-      val state = // synthetic state — the data dir is unused
-        if (withState)
-          stateProbes(out, m).map { case (n, f) => (n, f, base) }
-        else Nil
-      dense ++ sparse ++ denseChain ++ state
+      dense ++ sparse ++ denseChain
     }
 
     // warm-up: same plans, small data, separate scratch namespace
@@ -979,8 +576,7 @@ object ScaleProbe {
         ProbeNames.map(byName) ++ extraProbes(1).map(_._2)
       else Nil) ++
         (if (withSparse) sparseProbes(1).map(_._2) else Nil) ++
-        (if (withDenseChain) denseChainProbes(1).map(_._2) else Nil) ++
-        (if (withState) stateProbes(out, 1).map(_._2) else Nil)
+        (if (withDenseChain) denseChainProbes(1).map(_._2) else Nil)
     warmCells.foreach { fn =>
       try run(fn, warmDir) catch { case _: Throwable => }
     }
@@ -988,50 +584,17 @@ object ScaleProbe {
 
     // scale -> query -> (tMin, rows)
     val results = scales.map { m =>
-      val setups = if (withState) stateSetups(out, m)
-        else Map.empty[String, SparkSession => Unit]
       val perQuery = cells(m).map { case (name, fn, d) =>
-        // partitioned-state cells: snapshot reset OUTSIDE the timed
-        // region, before EVERY invocation (round-13 advice). Setup
-        // failures are contained like sample failures (review
-        // finding): an escaping exception here would abort the WHOLE
-        // run — the loss mode timed()'s catch exists to prevent. A
-        // failed setup MARKS ITS SAMPLE FAILED (-1) rather than
-        // proceeding to time against un-reset state (round-14 advice:
-        // a PARTIALLY applied reset — rollbackTo that deleted newer
-        // manifests then crashed before its vacuum — leaves a
-        // readable-but-wrong store, and the sample would then succeed
-        // and record a valid-looking time against the wrong fixture).
-        val setup = setups.get(name)
-        def trySetup(): Boolean = setup.forall { s =>
-          try { s(spark); true }
-          catch { case e: Throwable =>
-            System.err.println(s"[probe] setup for $name failed " +
-              s"(sample marked -1): ${e.getMessage}")
-            false
-          }
-        }
-        // releaseBlocks runs UNCONDITIONALLY around every pass
-        // (round-15 advice): a trySetup() that fails may have
-        // PARTIALLY applied (ensureState's localCheckpoint blocks,
-        // an interrupted rollback), and the failed-setup early-out
-        // used to skip the release — leaking those blocks into the
-        // next measurement, the exact cross-sample pollution the
-        // run() cleanup exists to prevent. Double-release after a
-        // successful timed() (whose run() already releases) is a
-        // cheap no-op.
-        def guarded[A](fail: A)(pass: => A): A =
-          try { if (trySetup()) pass else fail }
-          finally releaseBlocks(spark)
-        val t1 = guarded(-1.0)(timed(fn, d))
+        val t1 = timed(fn, d)
         if (owners.contains(name)) ExtQueries.resetSharedScratch(name)
-        val t2 = guarded(-1.0)(timed(fn, d))
+        val t2 = timed(fn, d)
         // the untimed row-count pass releases its blocks too — its
         // localCheckpoint blocks would otherwise leak INTO the next
         // query's t1 sample
-        val rows = guarded(-1L)(
+        val rows =
           try fn(spark, d).count()
-          catch { case _: Throwable => -1L })
+          catch { case _: Throwable => -1L }
+          finally releaseBlocks(spark)
         // min of the SUCCESSFUL samples; -1 only when both crashed
         val t = Seq(t1, t2).filter(_ >= 0) match {
           case Nil => -1.0; case ok => ok.min
@@ -1042,12 +605,6 @@ object ScaleProbe {
       }
       m -> perQuery
     }
-
-    // round-14 longitudinal cells: merge-script-format [probe] lines
-    // only (the committed SCALEPROBE artifact is the multi-run merge;
-    // these cells are absent from the single-run JSON by design)
-    if (withBreakdown) scales.foreach(m => runBreakdown(spark, out, m))
-    if (withCompact) scales.foreach(m => runCompactCells(spark, out, m))
 
     // one JSON document: per query, per scale, time + rows + two
     // exponents — alpha over the full span (min→max scale; includes

@@ -302,9 +302,20 @@ object Aggregates {
       .agg(sum(col("__c")).as("__s"))
       .collect()
       .map(r => (r.getInt(0), r.get(1), r.getLong(2)))
-    // exclusive prefix per group across ascending partition id
+    // exclusive prefix per group across ascending partition id, grouped
+    // on a VALUE-equal key: Row.get returns binary keys as Array[Byte]
+    // (also inside struct Rows and arrays), whose equality and hash are
+    // per-reference, so grouping on the raw value would split one
+    // group's prefix chain. (Map keys cannot reach here: the range
+    // partitioning needs an orderable group type.)
+    def canon(g: Any): Any = g match {
+      case b: Array[Byte] => b.toSeq
+      case r: Row => r.toSeq.map(canon)
+      case xs: Seq[_] => xs.map(canon)
+      case other => other
+    }
     val offsets = subtotals.sortBy(_._1)
-      .groupBy(_._2).valuesIterator.flatMap { rows =>
+      .groupBy(t => canon(t._2)).valuesIterator.flatMap { rows =>
         rows.scanLeft((0, rows.head._2, 0L)) {
           case ((_, g, acc), (pid, _, s)) => (pid, g, acc + s)
         }.init.zip(rows).map { case ((_, _, prefix), (pid, g, _)) =>

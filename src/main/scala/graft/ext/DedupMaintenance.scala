@@ -4,35 +4,25 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** The maintenance half of the dedup lifecycle — index upserts and
-  * retractions, cluster-table merge/split maintenance, and the
-  * partitioned-parquet production forms of all of them — mixed into
-  * [[Dedup]] (same API surface, split out of the monolith per the
-  * round-12 verdict item 6).
+  * retractions and cluster-table merge/split maintenance — mixed into
+  * [[Dedup]] (same API surface, split out of the monolith).
   *
-  * The partitioned forms run on [[StateStore]]'s transactional
-  * write-then-swap protocol (round-12 verdict item 1): a maintenance
-  * cycle reads its touched buckets at the current committed snapshot,
-  * writes its merge output into a fresh immutable generation, and
-  * publishes with one atomic manifest rename. Consequences worth
-  * naming, because they delete the previous protocol's documented
-  * caveats rather than rewording them:
+  * Every verb is a pure DataFrame → DataFrame function over in-memory
+  * state: the caller owns persistence. Each one keeps the incremental
+  * maintenance invariant "the incremental answer equals recomputation"
+  * — the maintained index or cluster table equals the fresh build over
+  * the updated corpus (the q240–q261 oracles and DedupSpec pin this),
+  * up to the documented capped-shingle asymmetry of
+  * [[retractShingleIndex]]. The `localCheckpoint` calls are
+  * compute-once memos for frames consumed several times; correctness
+  * never depends on them.
   *
-  *  - NO read-before-self-overwrite barrier exists anywhere: inputs
-  *    are never overwritten, so lineage recompute after an executor
-  *    loss re-reads exactly the files the plan bound. The
-  *    `localCheckpoint` calls that remain are compute-once MEMOS for
-  *    frames consumed several times — correctness never depends on
-  *    them, on any cluster.
-  *  - NO emptied-partition crash window exists: a bucket the merge
-  *    empties simply leaves the manifest in the same atomic swap, so
-  *    a stale partition can never resurrect retracted or pre-merge
-  *    rows. The post-commit audits kept here can only fire on a logic
-  *    bug, not on a crash.
-  *  - A crash ANYWHERE in a cycle leaves the previous snapshot fully
-  *    readable and the retried cycle re-runs from consistent state
-  *    (the cluster table and its id-keyed projection commit under ONE
-  *    manifest — see [[StateStore]] on why two renames would break
-  *    re-delivery).
+  * The one persisted form left is id-keyed state on [[StateStore]]
+  * (`*IdKeyedStatePartitioned`): batch-wins upsert and takedown
+  * retraction over hash-partitioned parquet, each cycle committed with
+  * one atomic manifest swap. No registered query or ML path calls it;
+  * it stays only because the StateStore specs exercise the store
+  * through it, and goes when that store is retired.
   */
 private[graft] trait DedupMaintenance { this: Dedup.type =>
 
@@ -154,9 +144,12 @@ private[graft] trait DedupMaintenance { this: Dedup.type =>
     * rebuild EXACTLY (the q251/q253 oracles), including on keys the
     * corpus has never seen.
     *
-    * Scale shape: O(batch) postings shuffle to group the delta, then
-    * ONE key-keyed full-outer join against the index with a map-side
-    * array union — the corpus is never rescanned. */
+    * Scale shape: O(batch) postings shuffle to group the delta, then a
+    * key-keyed LEFT join of the index against the grouped delta
+    * (broadcast when small, so the index payload never shuffles) with
+    * a map-side array union, plus a keys-only LEFT-ANTI join that adds
+    * the keys the corpus has never seen — the corpus is never
+    * rescanned. */
   def upsertPostingsIndex(index: DataFrame, batchPostings: DataFrame,
       keyCols: Seq[String]): DataFrame = {
     // the empty-list element type derives from the index's own cpids
@@ -264,18 +257,14 @@ private[graft] trait DedupMaintenance { this: Dedup.type =>
     if (ordered) out.orderBy(idCol) else out
   }
 
-  /** The label-space MERGE MAPPING at the heart of [[upsertClusters]],
-    * factored out so [[upsertClustersPartitioned]] can never key its
-    * partition pruning differently than the in-memory merge it
-    * mirrors: given the current (id, cluster) table and the delta
-    * pairs, contract the delta to label space (own id for unseen batch
-    * docs), run components over the CONTRACTED graph only
-    * (≤ 2·|newPairs| nodes regardless of corpus size), and return the
-    * (lbl → new_lbl) rows for labels that actually MERGE — identity
-    * rows drop, so untouched clusters never meet the relabel join.
-    * `cur` may be PRUNED to any superset of the delta endpoints' rows
-    * (the partitioned form probes the id-keyed projection's endpoint
-    * buckets only) — endpoint labels are the only lookups made. */
+  /** The label-space MERGE MAPPING at the heart of [[upsertClusters]]:
+    * given the current (id, cluster) table and the delta pairs,
+    * contract the delta to label space (own id for unseen batch docs),
+    * run components over the CONTRACTED graph only (≤ 2·|newPairs|
+    * nodes regardless of corpus size), and return the (lbl → new_lbl)
+    * rows for labels that actually MERGE — identity rows drop, so
+    * untouched clusters never meet the relabel join. Endpoint labels
+    * are the only lookups made in `cur`. */
   private def clusterMergeMapping(cur: DataFrame, newPairs: DataFrame)
       : DataFrame = {
     val pairs = newPairs.select(col("id_a"), col("id_b"))
@@ -307,15 +296,11 @@ private[graft] trait DedupMaintenance { this: Dedup.type =>
   }
 
   /** Batch docs' cluster labels under a merge mapping — the batch half
-    * of [[upsertClusters]], shared with [[upsertClustersPartitioned]]
-    * for the same reason [[clusterMergeMapping]] is: the partitioned
-    * path must not be ABLE to label a batch doc differently than the
-    * in-memory merge it mirrors. Unseen ids only (the anti-join makes
-    * re-delivery harmless); a doc a delta edge touched maps through
-    * the mapping keyed on its own id (its current label), anyone else
-    * is a singleton with its own id. `cur` may be pruned to any
-    * superset of the `newIds` buckets' rows (presence information is
-    * complete there). Returns (id, cluster). */
+    * of [[upsertClusters]]. Unseen ids only (the anti-join against
+    * `cur` makes re-delivery harmless); a doc a delta edge touched maps
+    * through the mapping keyed on its own id (its current label),
+    * anyone else is a singleton with its own id. Returns
+    * (id, cluster). */
   private def batchClusterLabels(cur: DataFrame, mapping: DataFrame,
       newIds: DataFrame, idCol: String): DataFrame =
     newIds.select(col(idCol).as("id"))
@@ -386,349 +371,6 @@ private[graft] trait DedupMaintenance { this: Dedup.type =>
     // this straight into the report join, which destroys row order;
     // q246 (the query surface) keeps the ordered default.
     if (ordered) out.orderBy(idCol) else out
-  }
-
-  // ==================================================================
-  // Partitioned parquet state — the production forms, on StateStore's
-  // transactional write-then-swap protocol
-  // ==================================================================
-
-  /** Write a banded posting index as HASH-PARTITIONED StateStore state
-    * (`pbucket = pmod(hash(keys), numBuckets)`) — the production
-    * layout for [[upsertPostingsIndexPartitioned]]: at 100 TB the
-    * index itself is large, and the single-table
-    * [[upsertPostingsIndex]] necessarily rewrites (and re-sorts) every
-    * row per upsert because parquet state is immutable — a
-    * 0.1%-of-keys delta still costs a full table rewrite. Partitioned
-    * state bounds every cycle's I/O to the buckets the delta
-    * touches. */
-  def writePostingsIndexPartitioned(index: DataFrame, path: String,
-      keyCols: Seq[String], numBuckets: Int): Unit =
-    StateStore.create(index.sparkSession, path,
-      index.withColumn("pbucket",
-        pmod(hash(keyCols.map(col): _*), lit(numBuckets))),
-      numBuckets)
-
-  /** [[upsertPostingsIndex]] against partitioned StateStore state,
-    * reading and superseding ONLY the buckets the delta touches: the
-    * merge logic is identical (grouped delta, one key-keyed full-outer
-    * join, map-side `array_union`), the state side is pruned to the
-    * delta's buckets via the manifest, and the merge output commits
-    * through [[StateStore.commit]] — a fresh generation plus one
-    * atomic manifest swap, so untouched buckets' files are never read
-    * and never rewritten (DedupSpec pins both directions) and a crash
-    * anywhere leaves the previous snapshot fully readable. The
-    * bucket-id collect is ≤ `numBuckets` ints (KB-bounded — the
-    * partition-pruning literal); the delta's eager checkpoint is a
-    * compute-once memo for its two consumers, NOT a correctness
-    * barrier (state inputs are immutable under this protocol).
-    * Returns the touched bucket ids. */
-  def upsertPostingsIndexPartitioned(statePath: String,
-      batchPostings: DataFrame, keyCols: Seq[String], numBuckets: Int)
-      : Seq[Int] = {
-    val spark = batchPostings.sparkSession
-    StateStore.requireNumBuckets(spark, statePath, numBuckets)
-    val delta = batchPostings
-      .groupBy(keyCols.map(col): _*)
-      .agg(sort_array(collect_set(col("pid"))).as("bpids"))
-      .withColumn("pbucket",
-        pmod(hash(keyCols.map(col): _*), lit(numBuckets)))
-      .localCheckpoint(eager = true) // memo: touched AND merge
-    val touched = delta.select("pbucket").distinct()
-      .collect().map(_.getInt(0)).sorted.toSeq
-    val cur = StateStore.readBuckets(spark, statePath, touched)
-    val ct = cur.schema("cpids").dataType.sql
-    val merged = cur.drop("pbucket")
-      .join(delta.drop("pbucket"), keyCols, "full_outer")
-      .select(keyCols.map(col) :+
-        sort_array(array_union(
-          coalesce(col("cpids"), array().cast(ct)),
-          coalesce(col("bpids"), array().cast(ct))))
-          .as("cpids"): _*)
-      .withColumn("pbucket",
-        pmod(hash(keyCols.map(col): _*), lit(numBuckets)))
-    StateStore.commit(spark, statePath, merged, touched)
-    touched
-  }
-
-  /** [[retractPostingsIndex]] against partitioned StateStore state —
-    * [[upsertPostingsIndexPartitioned]]'s takedown half: the deletion
-    * delta prunes the state read to its touched buckets, the same
-    * left-join + map-side `array_except` merge runs on the pruned side
-    * only (emptied keys drop, exactly as the in-memory form), and the
-    * commit is the atomic manifest swap — a bucket whose keys ALL
-    * empty produces no output rows and simply leaves the manifest in
-    * the same swap, so no stale partition can ever un-apply a takedown
-    * (the old protocol's emptied-directory crash window is gone
-    * structurally, not audited around). The post-commit audit kept
-    * below re-reads the touched buckets and requires every retracted
-    * (key, pid) posting absent — under this protocol it can only fire
-    * on a merge logic bug, and it is bounded by the touched buckets.
-    * Returns the touched bucket ids. */
-  def retractPostingsIndexPartitioned(statePath: String,
-      deletedPostings: DataFrame, keyCols: Seq[String], numBuckets: Int)
-      : Seq[Int] = {
-    val spark = deletedPostings.sparkSession
-    StateStore.requireNumBuckets(spark, statePath, numBuckets)
-    val delta = deletedPostings
-      .groupBy(keyCols.map(col): _*)
-      .agg(collect_set(col("pid")).as("dpids"))
-      .withColumn("pbucket",
-        pmod(hash(keyCols.map(col): _*), lit(numBuckets)))
-      .localCheckpoint(eager = true) // memo: touched, merge, audit
-    val touched = delta.select("pbucket").distinct()
-      .collect().map(_.getInt(0)).sorted.toSeq
-    val merged = StateStore.readBuckets(spark, statePath, touched)
-      .drop("pbucket")
-      .join(delta.drop("pbucket"), keyCols, "left")
-      .select(keyCols.map(col) :+
-        when(col("dpids").isNotNull,
-          array_except(col("cpids"), col("dpids")))
-          .otherwise(col("cpids")).as("cpids"): _*)
-      .filter(size(col("cpids")) >= 1)
-      .withColumn("pbucket",
-        pmod(hash(keyCols.map(col): _*), lit(numBuckets)))
-    StateStore.commit(spark, statePath, merged, touched)
-    // post-commit audit: no retracted (key, pid) posting may be
-    // readable in the touched buckets at the new snapshot
-    val retracted = delta.drop("pbucket")
-      .select(keyCols.map(col) :+ explode(col("dpids")).as("rpid"): _*)
-    val stale = StateStore.readBuckets(spark, statePath, touched)
-      .join(retracted, keyCols)
-      .filter(array_contains(col("cpids"), col("rpid")))
-      .count()
-    require(stale == 0,
-      s"retraction audit failed: $stale retracted postings still " +
-        s"readable under $statePath — the merge retained them " +
-        "(logic bug; the commit protocol cannot produce this)")
-    touched
-  }
-
-  /** Maintenance receipt of the partitioned cluster ops: which buckets
-    * of the label-keyed table were superseded, which buckets of the
-    * id-keyed projection were PROBED (the pruned read that replaced
-    * the old full-state scans — round-12 verdict item 2), and which
-    * projection buckets were superseded. All ≤ numBuckets ints. */
-  case class ClusterMaintenanceReport(touched: Seq[Int],
-      projProbed: Seq[Int], projTouched: Seq[Int])
-
-  /** Table names of the partitioned cluster state: the label-keyed
-    * primary (`pbucket = pmod(hash(cluster))` — every row a merge or
-    * split can move lands in a delta-derivable label bucket) and the
-    * id-keyed projection (`pbucket = pmod(hash(id))` — the probe side
-    * for endpoint-label lookups, batch-id anti-joins and
-    * deleted-id→affected-label lookups, which label-keyed state cannot
-    * prune). Both commit under ONE manifest swap. */
-  val ClustersByLabel = "bylbl"
-  val ClustersById = "byid"
-
-  /** Write a cluster table as partitioned StateStore state — BOTH
-    * orientations in one store ([[ClustersByLabel]] +
-    * [[ClustersById]]), created and thereafter committed atomically
-    * together. Label-hashing the primary is what makes maintenance
-    * prunable (every row an upsert can change has cluster ∈ merged
-    * labels; every row a retraction can change has cluster ∈ affected
-    * labels — both delta-bounded); id-hashing the projection is what
-    * makes the PROBES prunable (round-12 verdict item 2: the
-    * endpoint-label lookup, the batch-id anti-join and the deleted-id
-    * lookup are id-keyed and previously scanned full state). */
-  def writeClustersPartitioned(clusters: DataFrame, path: String,
-      idCol: String, numBuckets: Int): Unit = {
-    val base = clusters.select(col(idCol), col("cluster"))
-    StateStore.create(clusters.sparkSession, path, Map(
-      ClustersByLabel -> base.withColumn("pbucket",
-        pmod(hash(col("cluster")), lit(numBuckets))),
-      ClustersById -> base.withColumn("pbucket",
-        pmod(hash(col(idCol)), lit(numBuckets)))),
-      numBuckets)
-  }
-
-  /** [[upsertClusters]] against partitioned StateStore state, probing
-    * and superseding ONLY delta-derived buckets. The merge mapping is
-    * the SAME [[clusterMergeMapping]] the in-memory form uses, fed by
-    * the id-keyed projection pruned to the delta endpoints' and batch
-    * ids' buckets — complete for both lookups it serves (endpoint
-    * labels; batch-id presence), so the old full-state scans are gone
-    * (round-12 verdict item 2). The write set on the primary is
-    * buckets of {mapping.lbl ∪ mapping.new_lbl ∪ batch labels};
-    * changed rows (relabeled ∪ batch) also supersede their id-hashed
-    * projection buckets; BOTH tables commit under one manifest swap,
-    * so no crash can leave the probe side disagreeing with the
-    * primary. A bucket CAN fully empty here (all its labels may merge
-    * away) — it leaves the manifest in the same swap. The post-commit
-    * audit (round-12 advice) requires no pre-merge label readable in
-    * the touched buckets — under this protocol only a logic bug can
-    * fire it. Checkpoints are compute-once memos, not barriers. */
-  def upsertClustersPartitioned(statePath: String, newPairs: DataFrame,
-      newIds: DataFrame, idCol: String, numBuckets: Int)
-      : ClusterMaintenanceReport = {
-    val spark = newPairs.sparkSession
-    StateStore.requireNumBuckets(spark, statePath, numBuckets)
-    def bucketOf(c: Column): Column = pmod(hash(c), lit(numBuckets))
-    // every id whose current label or presence the merge must know
-    val probeIds = newPairs.select(col("id_a").as("id"))
-      .unionByName(newPairs.select(col("id_b").as("id")))
-      .unionByName(newIds.select(col(idCol).as("id")))
-      .dropDuplicates("id")
-    val projProbed = probeIds.select(bucketOf(col("id")).as("b"))
-      .distinct().collect().map(_.getInt(0)).sorted.toSeq
-    val probe = StateStore
-      .readBuckets(spark, statePath, ClustersById, projProbed)
-      .select(col(idCol).as("id"), col("cluster"))
-    val mapping = clusterMergeMapping(probe, newPairs)
-      .localCheckpoint(eager = true) // memo: touched, merge, changed, audit
-    val batchOut = batchClusterLabels(probe, mapping, newIds, idCol)
-      .localCheckpoint(eager = true) // memo: touched, merge, changed
-    val touched = mapping.select(bucketOf(col("lbl")).as("b"))
-      .unionByName(mapping.select(bucketOf(col("new_lbl")).as("b")))
-      .unionByName(batchOut.select(bucketOf(col("cluster")).as("b")))
-      .distinct().collect().map(_.getInt(0)).sorted.toSeq
-    val curT = StateStore
-      .readBuckets(spark, statePath, ClustersByLabel, touched)
-      .drop("pbucket")
-    // ONE relabel pass over the touched buckets feeds BOTH the primary
-    // merge and the projection delta (review fix: deriving `changed`
-    // from a second curT⋈mapping join re-read the touched buckets —
-    // the hot path the partitioning exists to bound)
-    val relabel = curT
-      .join(mapping, curT("cluster") === mapping("lbl"), "left")
-      .select(col(idCol), col("new_lbl"),
-        curT("cluster").as("old_cluster"))
-      .localCheckpoint(eager = true) // memo: merged AND changed
-    val merged = relabel
-      .select(col(idCol),
-        coalesce(col("new_lbl"), col("old_cluster")).as("cluster"))
-      .unionByName(batchOut.select(col("id").as(idCol), col("cluster")))
-      .withColumn("pbucket", bucketOf(col("cluster")))
-    // projection delta: exactly the rows whose label changed — the
-    // relabeled corpus rows (non-null new_lbl) plus the batch rows
-    val changed = relabel.filter(col("new_lbl").isNotNull)
-      .select(col(idCol), col("new_lbl").as("cluster"))
-      .unionByName(batchOut.select(col("id").as(idCol), col("cluster")))
-      .localCheckpoint(eager = true) // memo: projTouched AND projMerged
-    val projTouched = changed.select(bucketOf(col(idCol)).as("b"))
-      .distinct().collect().map(_.getInt(0)).sorted.toSeq
-    val projMerged = StateStore
-      .readBuckets(spark, statePath, ClustersById, projTouched)
-      .drop("pbucket")
-      .join(changed.select(col(idCol)), Seq(idCol), "left_anti")
-      .unionByName(changed)
-      .withColumn("pbucket", bucketOf(col(idCol)))
-    StateStore.commit(spark, statePath, Map(
-      ClustersByLabel -> (merged, touched),
-      ClustersById -> (projMerged, projTouched)))
-    // post-commit audit (round-12 advice): no row in the touched
-    // primary buckets may still carry a pre-merge label
-    val stale = StateStore
-      .readBuckets(spark, statePath, ClustersByLabel, touched)
-      .join(mapping.select(col("lbl").as("cluster")), Seq("cluster"),
-        "left_semi")
-      .count()
-    require(stale == 0,
-      s"cluster upsert audit failed: $stale rows under pre-merge " +
-        s"labels readable under $statePath (merge logic bug; the " +
-        "commit protocol cannot produce this)")
-    ClusterMaintenanceReport(touched, projProbed, projTouched)
-  }
-
-  /** [[retractClusters]] against partitioned StateStore state — the
-    * structurally interesting direction: deletion can SPLIT a
-    * component, and the re-clustered survivors take new labels (min
-    * retained id of each split part) that can hash into buckets the
-    * deletion delta never listed. The deleted-id→affected-label lookup
-    * probes the id-keyed projection pruned to the deleted ids' buckets
-    * (round-12 verdict item 2 — previously a full-state scan); the
-    * primary write set is discovered in two steps — buckets of the
-    * AFFECTED labels plus buckets of the RELABELED output's labels,
-    * known only after re-clustering the affected components' surviving
-    * pair subgraph. The projection retracts the deleted ids and
-    * re-labels the relabeled survivors; both tables commit under one
-    * manifest swap. The takedown audit requires no deleted id readable
-    * in either table's touched buckets at the new snapshot. */
-  def retractClustersPartitioned(statePath: String, pairs: DataFrame,
-      deletedIds: DataFrame, idCol: String, numBuckets: Int)
-      : ClusterMaintenanceReport = {
-    val spark = deletedIds.sparkSession
-    StateStore.requireNumBuckets(spark, statePath, numBuckets)
-    def bucketOf(c: Column): Column = pmod(hash(c), lit(numBuckets))
-    val del = deletedIds.select(col(idCol).as("id"))
-      .dropDuplicates("id")
-      .localCheckpoint(eager = true) // memo: probed, affected,
-                                     // survivors, projection, audits
-    val projProbed = del.select(bucketOf(col("id")).as("b"))
-      .distinct().collect().map(_.getInt(0)).sorted.toSeq
-    // only components holding a deleted doc can change structure —
-    // looked up in the id-keyed projection's deleted-id buckets only
-    val affected = StateStore
-      .readBuckets(spark, statePath, ClustersById, projProbed)
-      .select(col(idCol).as("id"), col("cluster"))
-      .join(del, Seq("id"), "left_semi")
-      .select("cluster").dropDuplicates("cluster")
-      .localCheckpoint(eager = true) // memo: readBuckets, survivors, keep
-    val readBucketIds = affected.select(bucketOf(col("cluster")).as("b"))
-      .distinct().collect().map(_.getInt(0)).sorted.toSeq
-    // surviving members of the affected components, from the pruned
-    // primary buckets only
-    val survivors = StateStore
-      .readBuckets(spark, statePath, ClustersByLabel, readBucketIds)
-      .select(col(idCol).as("id"), col("cluster"))
-      .join(affected, Seq("cluster"), "left_semi")
-      .select("id")
-      .join(del, Seq("id"), "left_anti")
-      .localCheckpoint(eager = true) // memo: sub (×2) + nodes
-    val sub = pairs.select(col("id_a"), col("id_b"))
-      .join(survivors.withColumnRenamed("id", "id_a"), Seq("id_a"),
-        "left_semi")
-      .join(survivors.withColumnRenamed("id", "id_b"), Seq("id_b"),
-        "left_semi")
-    // dupClusters eagerly checkpoints its output — materialized here
-    val relabeled = dupClusters(sub,
-      survivors.select(col("id").as(idCol)), idCol, ordered = false)
-    // split parts can take labels hashing into buckets the delta never
-    // listed — those join the write set and their unchanged rows are
-    // carried through (a committed bucket is complete, so its
-    // unchanged rows must re-write with it)
-    val touched = (readBucketIds ++
-      relabeled.select(bucketOf(col("cluster")).as("b")).distinct()
-        .collect().map(_.getInt(0))).distinct.sorted
-    val keep = StateStore
-      .readBuckets(spark, statePath, ClustersByLabel, touched)
-      .drop("pbucket")
-      .join(affected, Seq("cluster"), "left_anti")
-    val out = keep.select(col(idCol), col("cluster"))
-      .unionByName(relabeled.select(col(idCol), col("cluster")))
-      .withColumn("pbucket", bucketOf(col("cluster")))
-    // projection delta: deleted ids leave; relabeled survivors update
-    val projTouched = (projProbed ++
-      relabeled.select(bucketOf(col(idCol)).as("b")).distinct()
-        .collect().map(_.getInt(0))).distinct.sorted
-    val projMerged = StateStore
-      .readBuckets(spark, statePath, ClustersById, projTouched)
-      .drop("pbucket")
-      .join(del.select(col("id").as(idCol)), Seq(idCol), "left_anti")
-      .join(relabeled.select(col(idCol)), Seq(idCol), "left_anti")
-      .unionByName(relabeled.select(col(idCol), col("cluster")))
-      .withColumn("pbucket", bucketOf(col(idCol)))
-    StateStore.commit(spark, statePath, Map(
-      ClustersByLabel -> (out, touched),
-      ClustersById -> (projMerged, projTouched)))
-    // takedown audit on BOTH orientations at the new snapshot
-    // (affected LABELS may legitimately survive — a split part keeps
-    // label L when L itself is retained — so the audit checks ids)
-    val stalePrimary = StateStore
-      .readBuckets(spark, statePath, ClustersByLabel, touched)
-      .select(col(idCol).as("id"))
-      .join(del, Seq("id"), "left_semi").count()
-    val staleProj = StateStore
-      .readBuckets(spark, statePath, ClustersById, projTouched)
-      .select(col(idCol).as("id"))
-      .join(del, Seq("id"), "left_semi").count()
-    require(stalePrimary == 0 && staleProj == 0,
-      s"cluster takedown audit failed: $stalePrimary primary / " +
-        s"$staleProj projection rows for deleted ids still readable " +
-        s"under $statePath (logic bug; the commit protocol cannot " +
-        "produce this)")
-    ClusterMaintenanceReport(touched, projProbed, projTouched)
   }
 
   /** Write any ID-KEYED state table as partitioned StateStore state

@@ -50,17 +50,12 @@ import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
   * open files a committed manifest references, so an in-flight cycle
   * is invisible until its rename lands. CONTRACTS, stated precisely:
   *
-  *  - FILESYSTEM: the commit point is pluggable — provide a
-  *    [[CommitGuard]] matching your store's strongest primitive.
-  *    [[RenameCommitGuard]] (default) is one no-overwrite `rename` to
-  *    a fresh name and requires ATOMIC RENAME — HDFS and local
-  *    filesystems qualify (the same caveat Spark's streaming
+  *  - FILESYSTEM: the commit point ([[swap]]) is one no-overwrite
+  *    `rename` to a fresh name and requires ATOMIC RENAME — HDFS and
+  *    local filesystems qualify (the same caveat Spark's streaming
   *    CheckpointFileManager documents). S3A and most object stores do
-  *    NOT (rename is a non-atomic copy+delete there) — deploy those
-  *    with [[CasCommitGuard]], which publishes via an exclusive
-  *    create (the HDFS-API stand-in for a conditional PUT) and whose
-  *    torn-destination crash windows are spec-pinned under fault
-  *    injection. The tmp manifest is hflush/hsync'd before the swap,
+  *    NOT (rename is a non-atomic copy+delete there) and are not
+  *    supported. The tmp manifest is hflush/hsync'd before the swap,
   *    and [[current]] falls back LOUDLY to the newest PARSEABLE
   *    manifest, so even a torn highest-numbered manifest (crash
   *    mid-swap on a weaker FS) degrades reads to the previous
@@ -210,28 +205,6 @@ object StateStore {
       * them — the interleaving spec plants a pin here to prove a
       * version pinned mid-vacuum survives (round-17 verdict item 3). */
     @volatile var beforeVacuumRecheckHook: () => Unit = null
-  }
-
-  /** Driver-side phase accounting for the scale probe's commit-
-    * protocol breakdown (round-13 verdict item 6): cumulative
-    * wall-clock of manifest resolutions ([[current]]), generation
-    * writes (the Spark write job — which FUSES the pruned probe read,
-    * so this is the data-dependent phase) and manifest publishes
-    * (serialize + hsync + swap) since the last [[Timing.reset]].
-    * Probe-only observability: three nanoTime pairs per commit, no
-    * behavior change. */
-  private[graft] object Timing {
-    val currentSec = new java.util.concurrent.atomic.DoubleAdder
-    val writeSec = new java.util.concurrent.atomic.DoubleAdder
-    val publishSec = new java.util.concurrent.atomic.DoubleAdder
-    def reset(): Unit = {
-      currentSec.reset(); writeSec.reset(); publishSec.reset()
-    }
-    private[StateStore] def timed[A](
-        acc: java.util.concurrent.atomic.DoubleAdder)(f: => A): A = {
-      val t0 = System.nanoTime()
-      try f finally acc.add((System.nanoTime() - t0) / 1e9)
-    }
   }
 
   /** Write one table's generation directory with the store's LAYOUT
@@ -521,8 +494,7 @@ object StateStore {
     * fallback is announced on stderr per skipped version, and if NO
     * manifest parses the last failure propagates. Fails loudly on a
     * root that has never been [[create]]d. */
-  def current(spark: SparkSession, root: String): Manifest =
-    Timing.timed(Timing.currentSec) {
+  def current(spark: SparkSession, root: String): Manifest = {
     val (fs, rp) = fsOf(spark, root)
     val versions = manifestVersions(fs, rp)
     if (versions.isEmpty)
@@ -601,8 +573,7 @@ object StateStore {
 
   /** Serialize + atomically publish manifest `m` — the single commit
     * point of the whole protocol. */
-  private def publish(fs: FileSystem, root: Path, m: Manifest): Unit =
-    Timing.timed(Timing.publishSec) {
+  private def publish(fs: FileSystem, root: Path, m: Manifest): Unit = {
     val tmp = writeTmp(fs, root, s".manifest-${m.version}.tmp",
       serializeManifest(m))
     if (FailPoints.beforeManifestSwap)
@@ -640,228 +611,66 @@ object StateStore {
       require(fs.delete(dst, false), s"could not clear torn $dst")
     }
     if (FailPoints.beforeSwapHook != null) FailPoints.beforeSwapHook()
-    commitGuard.swap(fs, tmp, dst)
+    swap(fs, tmp, dst)
   }
 
-  /** The pluggable COMMIT POINT (round-14 verdict item 1): the one
-    * step that makes a fully-written, hsync'd tmp manifest visible at
-    * its final name. Everything else in the protocol — generation
-    * immutability, the torn-manifest framing, the destination probe —
-    * is filesystem-agnostic; ONLY this step needs a primitive the
-    * backing store must supply. Contract an implementation must meet:
-    *
-    *  1. EXCLUSIVE: if dst exists when the publish lands (a racing
-    *     writer won the version), fail loudly — atomically with the
-    *     publish itself wherever the store can express that. Never
-    *     clobber.
-    *  2. CRASH-SAFE: a crash at ANY point leaves dst absent, TORN
-    *     (detectable by the manifest's format+eof framing — readers
-    *     fall back, the retried publish clears it), or fully
-    *     committed. Never silently wrong.
-    *
-    * [[RenameCommitGuard]] (the default) meets both via a no-overwrite
-    * rename — correct on HDFS and local filesystems, where rename is
-    * atomic. Object stores (S3 and kin) do NOT have atomic rename;
-    * deploy there with [[CasCommitGuard]], whose one primitive is an
-    * exclusive create — the HDFS-API stand-in for a conditional PUT
-    * (S3 `If-None-Match: *`). Swap guards via [[setCommitGuard]];
-    * per-JVM, consistent with the store's single-writer discipline. */
-  trait CommitGuard {
-    def name: String
-    def swap(fs: FileSystem, tmp: Path, dst: Path): Unit
-    /** REPLACE dst with tmp's content — the in-place rewrite verb
-      * [[migrate]] needs: unlike [[swap]], dst is EXPECTED to exist
-      * (the pre-upgrade manifest being re-published), so exclusivity
-      * is not part of the contract — the single-writer discipline is
-      * (migrate is a writer-side verb). Consumes tmp. Crash contract:
-      * a crash leaves dst as the OLD bytes, the NEW bytes, or (on a
-      * backend without atomic replace) TORN — detectable by the
-      * manifest framing, recoverable by re-running [[migrate]], which
-      * restores from its intent file. Never silently wrong. */
-    def replace(fs: FileSystem, tmp: Path, dst: Path): Unit
-  }
-
-  /** Default guard: one no-overwrite rename — the strongest swap the
-    * FS API offers. On HDFS the no-overwrite check is atomic with the
-    * rename itself, so even a racing writer that slips into the TOCTOU
-    * window between publish's destination probe and this rename loses
-    * loudly instead of clobbering the winner's manifest. Requires
+  /** The commit point: ONE no-overwrite rename — the strongest swap
+    * the FS API offers. On HDFS the no-overwrite check is atomic with
+    * the rename itself, so even a racing writer that slips into the
+    * TOCTOU window between publish's destination probe and this rename
+    * loses loudly instead of clobbering the winner's manifest. Requires
     * ATOMIC RENAME (HDFS, local FS — the same caveat Spark's streaming
     * CheckpointFileManager documents); NOT correct on object stores,
     * where rename is a non-atomic copy+delete. */
-  object RenameCommitGuard extends CommitGuard {
-    val name = "rename"
-    def swap(fs: FileSystem, tmp: Path, dst: Path): Unit = {
-      try org.apache.hadoop.fs.FileContext
-        .getFileContext(fs.getUri, fs.getConf)
-        .rename(tmp, dst)
-      catch {
-        // the commit FAILS either way (loud, winner's snapshot
-        // intact); the diagnosis must not assert the racing-writer
-        // cause as the only one — the same catch sees genuine FS
-        // errors (transient HDFS failover IOException,
-        // UnsupportedFileSystemException on an FS without an
-        // AbstractFileSystem binding), so name the alternatives and
-        // keep the cause chained
-        case e: java.io.IOException =>
-          throw new RuntimeException(s"manifest swap to $dst failed " +
-            s"(${e.getClass.getSimpleName}: ${e.getMessage}) — " +
-            "either a concurrent writer (single-writer contract) or " +
-            "a filesystem error; inspect the cause", e)
-      }
-      // local ChecksumFileSystem writes a .crc sibling for the tmp
-      // file; the FileContext rename moves only the manifest itself,
-      // so drop the orphan (best-effort — invisible to reads anyway)
-      val crcTmp = new Path(dst.getParent, s".${tmp.getName}.crc")
-      try { if (fs.exists(crcTmp)) { fs.delete(crcTmp, false); () } }
-      catch { case _: Throwable => () }
+  private def swap(fs: FileSystem, tmp: Path, dst: Path): Unit = {
+    try org.apache.hadoop.fs.FileContext
+      .getFileContext(fs.getUri, fs.getConf)
+      .rename(tmp, dst)
+    catch {
+      // the commit FAILS either way (loud, winner's snapshot intact);
+      // the diagnosis must not assert the racing-writer cause as the
+      // only one — the same catch sees genuine FS errors (transient
+      // HDFS failover IOException, UnsupportedFileSystemException on
+      // an FS without an AbstractFileSystem binding), so name the
+      // alternatives and keep the cause chained
+      case e: java.io.IOException =>
+        throw new RuntimeException(s"manifest swap to $dst failed " +
+          s"(${e.getClass.getSimpleName}: ${e.getMessage}) — " +
+          "either a concurrent writer (single-writer contract) or " +
+          "a filesystem error; inspect the cause", e)
     }
-    /** One OVERWRITE rename — atomic on the same filesystems the swap
-      * is, so migration's replace has NO torn window here: a crash
-      * leaves dst as either the old bytes or the new, both parseable,
-      * content-identical snapshots. */
-    def replace(fs: FileSystem, tmp: Path, dst: Path): Unit = {
-      // a PRE-EXISTING checksum sidecar of dst (a CAS-guard-published
-      // manifest carries one) would be stale against the renamed-in
-      // bytes and fail every later open — drop it BEFORE the rename
-      // (a sidecar-less manifest reads fine; a crash here leaves the
-      // old bytes intact)
-      val crcDst = new Path(dst.getParent, s".${dst.getName}.crc")
-      try { if (fs.exists(crcDst)) { fs.delete(crcDst, false); () } }
-      catch { case _: Throwable => () }
-      org.apache.hadoop.fs.FileContext
-        .getFileContext(fs.getUri, fs.getConf)
-        .rename(tmp, dst, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-      // the tmp's sidecar orphan, as in swap
-      val crcTmp = new Path(dst.getParent, s".${tmp.getName}.crc")
-      try { if (fs.exists(crcTmp)) { fs.delete(crcTmp, false); () } }
-      catch { case _: Throwable => () }
-    }
+    dropTmpSidecar(fs, tmp, dst)
   }
 
-  /** Object-store-shaped guard: publishes by writing the manifest
-    * BYTES at the final name under an EXCLUSIVE CREATE — the
-    * conditional-PUT commit an object store deployment needs (S3
-    * `PUT If-None-Match: *`), expressed through the HDFS API's
-    * `create(dst, overwrite=false)`. No rename anywhere: the body is
-    * streamed straight to the committed name, so the guard is correct
-    * on stores whose rename is a non-atomic copy+delete.
-    *
-    *  - EXCLUSIVITY rides entirely on the exclusive create: a racing
-    *    writer's create fails with FileAlreadyExists and surfaces as
-    *    the same loud "concurrent writer" loss the rename guard
-    *    raises. HOW STRONG that is depends on what the FileSystem
-    *    implementation maps `create(dst, overwrite=false)` to. A
-    *    server-side conditional PUT (S3 `If-None-Match: *`) is atomic
-    *    — but Hadoop's stock S3A connector only issues one when
-    *    conditional-create support is explicitly enabled (available
-    *    from Hadoop 3.4.1+ via the `fs.s3a.*` create-conditional
-    *    options); its DEFAULT `create(path, overwrite=false)` is a
-    *    client-side existence probe followed by an unconditional PUT,
-    *    which degrades exclusivity to the same best-effort
-    *    check-then-act as the local filesystem used in tests. Deploy
-    *    this guard only on a connector/FileSystem whose exclusive
-    *    create is server-side atomic (a configured S3A, GCS — whose
-    *    create uses `ifGenerationMatch=0` — or a custom FileSystem
-    *    wrapping the store's conditional write); otherwise the
-    *    single-writer discipline is the only real protection, exactly
-    *    as for the destination probe it backs up.
-    *  - CRASH-SAFETY rides on the manifest framing: a crash mid-body
-    *    leaves a TORN dst — even one truncated at a line boundary is
-    *    caught by the eof sentinel — which readers fall back past and
-    *    the retried publish clears (spec-pinned under injected
-    *    mid-body and post-body crashes). A real conditional PUT is
-    *    all-or-nothing, so production is strictly SAFER than these
-    *    tested failure modes.
-    *  - tmp cleanup (the copy+delete's delete half) is best-effort
-    *    garbage collection; a crash before it leaves a dot-tmp file
-    *    [[vacuum]] already reclaims. */
-  object CasCommitGuard extends CommitGuard {
-    val name = "cas"
-    /** Deterministic crash injection for the guard's own spec battery.
-      * `truncateBodyAt >= 0`: write only that many bytes of the body,
-      * then crash — the torn-dst window of a non-atomic PUT/copy.
-      * `beforeSourceCleanup`: crash between the body landing and the
-      * tmp delete — the window between a copy+delete rename's copy and
-      * its delete. Test-only. */
-    private[graft] object FailPoints {
-      @volatile var truncateBodyAt: Long = -1L
-      @volatile var beforeSourceCleanup: Boolean = false
-    }
-    def swap(fs: FileSystem, tmp: Path, dst: Path): Unit = {
-      // a vanished tmp is a racing writer's publish of the same
-      // version stomping our scratch file (their publish clears
-      // same-named tmp leftovers) — the same contract-breach loss the
-      // rename guard surfaces when its rename source disappears, so
-      // raise the same diagnosis instead of a bare FileNotFound
-      val body =
-        try { val in = fs.open(tmp); try in.readAllBytes() finally in.close() }
-        catch {
-          case e: java.io.IOException =>
-            throw new RuntimeException(s"manifest swap to $dst failed " +
-              s"(${e.getClass.getSimpleName} reading $tmp: " +
-              s"${e.getMessage}) — either a concurrent writer " +
-              "(single-writer contract) or a filesystem error; " +
-              "inspect the cause", e)
-        }
-      val out =
-        try fs.create(dst, false)
-        catch {
-          case e: java.io.IOException =>
-            throw new RuntimeException(s"manifest swap to $dst " +
-              s"failed (${e.getClass.getSimpleName}: ${e.getMessage})" +
-              " — either a concurrent writer (single-writer contract)" +
-              " or a filesystem error; inspect the cause", e)
-        }
-      try {
-        val cut = FailPoints.truncateBodyAt
-        if (cut >= 0 && cut < body.length) {
-          out.write(body, 0, cut.toInt)
-          out.hflush(); out.hsync(); out.close()
-          sys.error(s"FAILPOINT: crash mid-PUT at $dst after $cut of " +
-            s"${body.length} bytes (torn destination)")
-        }
-        out.write(body)
-        out.hflush(); out.hsync()
-      } finally out.close()
-      if (FailPoints.beforeSourceCleanup)
-        sys.error(s"FAILPOINT: crash after $dst committed, before " +
-          "tmp cleanup (copy+delete's inter-step window)")
-      try { fs.delete(tmp, false); () }
-      catch { case _: Throwable => () } // dot-tmp garbage; vacuum's job
-    }
-    /** Full-body OVERWRITE PUT at dst. On a real object store a PUT is
-      * all-or-nothing — readers observe the old object or the new one,
-      * never a prefix — so production has no torn window here either.
-      * The HDFS-API SIMULATION (create(dst, overwrite=true) + write)
-      * CAN tear mid-body on a crash: that window is spec-pinned under
-      * the same [[FailPoints.truncateBodyAt]] injection as swap, and
-      * [[migrate]]'s intent-file protocol exists exactly so the torn
-      * destination is RESTORABLE (re-run migrate) rather than forfeited
-      * to vacuum. */
-    def replace(fs: FileSystem, tmp: Path, dst: Path): Unit = {
-      val body = {
-        val in = fs.open(tmp)
-        try in.readAllBytes() finally in.close()
-      }
-      val out = fs.create(dst, true)
-      try {
-        val cut = FailPoints.truncateBodyAt
-        if (cut >= 0 && cut < body.length) {
-          out.write(body, 0, cut.toInt)
-          out.hflush(); out.hsync(); out.close()
-          sys.error(s"FAILPOINT: crash mid-PUT at $dst after $cut of " +
-            s"${body.length} bytes (torn destination)")
-        }
-        out.write(body)
-        out.hflush(); out.hsync()
-      } finally out.close()
-      try { fs.delete(tmp, false); () }
-      catch { case _: Throwable => () } // dot-tmp garbage; vacuum's job
-    }
+  /** REPLACE dst with tmp's content — the in-place rewrite [[migrate]]
+    * needs: unlike [[swap]], dst is EXPECTED to exist (the pre-upgrade
+    * manifest being re-published), so exclusivity is not part of the
+    * contract — the single-writer discipline is. One OVERWRITE rename,
+    * atomic on the same filesystems the swap is, so a crash leaves dst
+    * as either the old bytes or the new, both parseable,
+    * content-identical snapshots. Consumes tmp. */
+  private def replace(fs: FileSystem, tmp: Path, dst: Path): Unit = {
+    // a PRE-EXISTING checksum sidecar of dst would be stale against
+    // the renamed-in bytes and fail every later open — drop it BEFORE
+    // the rename (a sidecar-less manifest reads fine; a crash here
+    // leaves the old bytes intact)
+    val crcDst = new Path(dst.getParent, s".${dst.getName}.crc")
+    try { if (fs.exists(crcDst)) { fs.delete(crcDst, false); () } }
+    catch { case _: Throwable => () }
+    org.apache.hadoop.fs.FileContext
+      .getFileContext(fs.getUri, fs.getConf)
+      .rename(tmp, dst, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    dropTmpSidecar(fs, tmp, dst)
   }
 
-  @volatile private var commitGuard: CommitGuard = RenameCommitGuard
+  /** Local ChecksumFileSystem writes a .crc sibling for the tmp file;
+    * the FileContext rename moves only the manifest itself, so drop
+    * the orphan (best-effort — invisible to reads anyway). */
+  private def dropTmpSidecar(fs: FileSystem, tmp: Path, dst: Path): Unit = {
+    val crcTmp = new Path(dst.getParent, s".${tmp.getName}.crc")
+    try { if (fs.exists(crcTmp)) { fs.delete(crcTmp, false); () } }
+    catch { case _: Throwable => () }
+  }
 
   /** Self-maintenance dials (round-14 verdict item 3) — the measured
     * manual cadence ("compact every 10 cycles, then vacuum",
@@ -902,8 +711,7 @@ object StateStore {
     * old generations (the cold tail), runs once per ~maxGenerations/2
     * cycles, and is one commit regardless of table count — amortized
     * O(corpus / maxGenerations) per cycle, the same trade every table
-    * format's background rewrite makes. Probe-measured in the
-    * `statec_auto` cadence cell. */
+    * format's background rewrite makes. */
   final case class MaintenancePolicy(
       maxGenerations: Int = 8,
       maxManifests: Int = 16,
@@ -959,14 +767,6 @@ object StateStore {
       ()
     }
     compacted
-  }
-
-  /** Install the commit point for this JVM's stores (see
-    * [[CommitGuard]]): [[RenameCommitGuard]] on filesystems with
-    * atomic rename, [[CasCommitGuard]] on object stores. Returns the
-    * previous guard so callers can scope the change. */
-  def setCommitGuard(g: CommitGuard): CommitGuard = {
-    val prev = commitGuard; commitGuard = g; prev
   }
 
   /** List the pbucket=<b> partition dirs actually present under one
@@ -1185,10 +985,10 @@ object StateStore {
       * Implemented by REWRITING the pin file's bytes (overwrite
       * create + hflush/hsync), NOT `FileSystem.setTimes` (round-17
       * advice, medium): setTimes is a no-op in the Hadoop base
-      * implementation and on object-store filesystems (S3A — the CAS
-      * guard's stated deployment target), where it would silently do
-      * nothing and let the pin expire under a dutifully-refreshing
-      * reader — the exact failure enforced pins exist to prevent. An
+      * implementation and on object-store filesystems (S3A), where
+      * it would silently do nothing and let the pin expire under a
+      * dutifully-refreshing reader — the exact failure enforced pins
+      * exist to prevent. An
       * overwrite create advances the modification time on every
       * backend because it creates a new object/file. Liveness rides
       * on the NAME + mtime ([[livePinVersions]] never reads pin
@@ -1548,21 +1348,19 @@ object StateStore {
     // single-writer contract nothing references it, so the retried
     // cycle clears and rewrites it — retry needs no manual vacuum
     if (fs.exists(new Path(rp, gen))) fs.delete(new Path(rp, gen), true)
-    val newBuckets = Timing.timed(Timing.writeSec) {
-      cur.buckets.map { case (t, old) =>
-        writes.get(t) match {
-          case None => t -> old
-          case Some((merged, touched)) =>
-            writeGeneration(merged, math.max(touched.size, 1),
-              new Path(rp, s"$gen/$t"))
-            val present = presentBuckets(fs, new Path(rp, s"$gen/$t"))
-            val undeclared = present.filterNot(touched.contains)
-            require(undeclared.isEmpty,
-              s"commit wrote table '$t' buckets $undeclared outside " +
-                s"its declared touched set $touched — the merge is " +
-                "mis-partitioned (caller bug)")
-            t -> (old -- touched ++ present.map(_ -> gen))
-        }
+    val newBuckets = cur.buckets.map { case (t, old) =>
+      writes.get(t) match {
+        case None => t -> old
+        case Some((merged, touched)) =>
+          writeGeneration(merged, math.max(touched.size, 1),
+            new Path(rp, s"$gen/$t"))
+          val present = presentBuckets(fs, new Path(rp, s"$gen/$t"))
+          val undeclared = present.filterNot(touched.contains)
+          require(undeclared.isEmpty,
+            s"commit wrote table '$t' buckets $undeclared outside " +
+              s"its declared touched set $touched — the merge is " +
+              "mis-partitioned (caller bug)")
+          t -> (old -- touched ++ present.map(_ -> gen))
       }
     }
     val m = Manifest(cur.version + 1, cur.numBuckets, cur.schemas,
@@ -1623,8 +1421,8 @@ object StateStore {
     * (and CHEAP: manifest-file deletes plus a [[vacuum]], no data
     * copied) precisely because generations are immutable and every
     * manifest is self-contained. The table-format "time travel"
-    * capability, used operationally to abandon a bad maintenance cycle
-    * and by the scale probe to reset state between timed samples.
+    * capability, used operationally to abandon a bad maintenance
+    * cycle.
     * Writer-side verb under the single-writer contract; rolls forward
     * nothing — `version` must be a still-present manifest, i.e. not
     * yet forfeited to [[vacuum]] (the spec pins the refusal).
@@ -1684,12 +1482,11 @@ object StateStore {
     *     into an INTENT file (`.manifest-NNNNNNNNN.mig`), hsync'd —
     *     so the bytes about to overwrite history exist durably
     *     somewhere else first;
-    *  2. [[CommitGuard.replace]] the manifest in place. Under the
-    *     rename guard this is ONE atomic overwrite-rename — a crash
-    *     leaves old or new bytes, both parseable, the same snapshot.
-    *     Under the CAS guard production is an all-or-nothing PUT; the
-    *     HDFS-API simulation can TEAR the destination mid-body, which
-    *     is exactly why the intent file precedes it;
+    *  2. [[replace]] the manifest in place: ONE atomic
+    *     overwrite-rename — a crash leaves old or new bytes, both
+    *     parseable, the same snapshot. A filesystem whose overwrite is
+    *     not atomic can TEAR the destination mid-body, which is
+    *     exactly why the intent file precedes it;
     *  3. verify the result parses as format [[FormatVersion]] and is
     *     Manifest-equal to what was read; delete the intent.
     *
@@ -1707,7 +1504,7 @@ object StateStore {
     * Intent files whose manifest is healthy again (migrated, or
     * re-published by a commit) are stale and vacuum reclaims them as
     * before. Concurrent READERS of a version mid-replace see old
-    * bytes, new bytes, or (CAS simulation only) a torn body whose
+    * bytes, new bytes, or (non-atomic overwrite only) a torn body whose
     * [[current]] fallback serves the previous committed snapshot
     * loudly — never silently wrong data. Manifests in a FUTURE format
     * propagate [[UnsupportedManifestFormatException]] — rewriting one
@@ -1752,7 +1549,7 @@ object StateStore {
           if (FailPoints.beforeMigrateReplace)
             sys.error(s"FAILPOINT: crash after migrate intent for " +
               s"v$v, before its in-place replace")
-          commitGuard.replace(fs, tmp, dst)
+          replace(fs, tmp, dst)
           verify(m)
           Some(v)
         }
@@ -1767,7 +1564,7 @@ object StateStore {
               // content).
               System.err.println(s"[statestore] migrate: restoring " +
                 s"torn manifest v$v under $root from its intent file")
-              commitGuard.replace(fs, intentPath, dst)
+              replace(fs, intentPath, dst)
               verify(intended)
               Some(v)
             case None =>
@@ -1867,8 +1664,8 @@ object StateStore {
           (n.startsWith("manifest-") && n.endsWith(".txt") &&
             !keepNames(n)) ||
           // stale dot-tmp files and their local-FS checksum sidecars
-          // (a crash between the CAS guard's PUT and its source
-          // cleanup leaves both) — except a pending restore's intent
+          // (a crashed publish or migrate leaves both) — except a
+          // pending restore's intent
           ((n.startsWith(".manifest-") || n.startsWith("..manifest-"))
             && !keepIntents(n))
       }.toSeq.sorted

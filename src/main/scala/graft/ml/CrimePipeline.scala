@@ -1,6 +1,6 @@
 package graft.ml
 
-import org.apache.spark.ml.{Pipeline, PipelineModel}
+import org.apache.spark.ml.{Pipeline, PipelineModel, PipelineStage}
 import org.apache.spark.ml.classification.RandomForestClassifier
 import org.apache.spark.ml.feature.{StringIndexer, VectorAssembler}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -23,14 +23,53 @@ import graft.engine._
   * Leakage discipline (`XGBoost.py:156,168-187`): indexers and density
   * counts are fitted on TRAIN only; test rows get `handleInvalid="keep"`
   * indices and 0-filled densities.
+  *
+  * Two recipes ([[Recipe]]) share ONE definition of the feature stages,
+  * the density encodings and the forest fit: the fixture-table pipeline
+  * ([[fit]]) and the reference's own pipeline on the crime-shaped table
+  * ([[fitCrime]]).
   */
 object CrimePipeline {
+
+  /** One weighted-forest recipe: the category column string-indexed
+    * into `indexOut`, the label column, the assembled feature list, the
+    * train-only count-encoding densities (key → output column), the
+    * forest size, and whether residual feature nulls are 0-filled
+    * before assembly. */
+  private final case class Recipe(indexIn: String, indexOut: String,
+      label: String, featureCols: Seq[String],
+      densities: Seq[(String, String)], numTrees: Int,
+      fillNulls: Boolean)
 
   val LabelCol = "category"
   val FeatureCols: Seq[String] = Seq(
     "d_year", "d_month", "d_dow", "month_sin", "month_cos",
     "l_quantity", "l_extendedprice", "l_discount", "p_size",
     "p_retailprice", "supp_density", "part_density", "brand_idx")
+
+  private val Lineitem = Recipe("p_brand", "brand_idx", LabelCol,
+    FeatureCols,
+    Seq("l_suppkey" -> "supp_density", "l_partkey" -> "part_density"),
+    numTrees = 30, fillNulls = false)
+
+  /** The crime table's EXACT 18-feature contract (`XGBoost.py:195-202`;
+    * serve-time arity assert `Stramlit_app.py:135`). */
+  val CrimeFeatureCols: Seq[String] = Seq(
+    "District", "Community Area", "d_year", "d_month", "d_hour", "d_dow",
+    "Latitude", "Longitude", "Beat", "Ward", "Hour_sin", "Hour_cos",
+    "IsWeekend", "Distance_from_center", "District_Crime_Count",
+    "Beat_Crime_Count", "Community_Crime_Count", "Location_Index")
+
+  /** Beat etc. can be null after cleaning (only District/coords are
+    * drop subsets; only Ward/Community Area are imputed), and
+    * VectorAssembler's default handleInvalid="error" would crash on
+    * them — hence `fillNulls` (`XGBoost.py:232-233`'s fillna(0)). */
+  private val Crime = Recipe("Location Description", "Location_Index",
+    "Crime_Category", CrimeFeatureCols,
+    Seq("District" -> "District_Crime_Count",
+      "Beat" -> "Beat_Crime_Count",
+      "Community Area" -> "Community_Crime_Count"),
+    numTrees = 20, fillNulls = true)
 
   /** The ONE feature block shared by training ([[base]]) and serving
     * ([[Serve.predictOne]]) — a single definition is the train/serve-parity
@@ -57,12 +96,14 @@ object CrimePipeline {
       df.filter(col("d_year") > cutoffYear))
 
   /** Attach train-only density features (count encodings) to any frame. */
-  def withDensities(target: DataFrame, train: DataFrame): DataFrame = {
-    val d1 = Density.attachCount(target, train.select("l_suppkey"),
-      "l_suppkey", "supp_density")
-    Density.attachCount(d1, train.select("l_partkey"),
-      "l_partkey", "part_density")
-  }
+  def withDensities(target: DataFrame, train: DataFrame): DataFrame =
+    attachDensities(target, train, Lineitem.densities)
+
+  private def attachDensities(target: DataFrame, train: DataFrame,
+      keys: Seq[(String, String)]): DataFrame =
+    keys.foldLeft(target) { case (df, (key, out)) =>
+      Density.attachCount(df, train.select(key), key, out)
+    }
 
   /** Inverse-frequency class-weight table clipped to [0.1, 5.0]
     * (`XGBoost.py:247-257`): n_classes rows, computed ONCE per training
@@ -86,25 +127,58 @@ object CrimePipeline {
   def withClassWeights(df: DataFrame, train: DataFrame): DataFrame =
     attachWeights(df, classWeightTable(train, LabelCol), LabelCol)
 
-  /** The Pipeline: brand StringIndexer (freq-ordered, handleInvalid=keep,
-    * M1) → label StringIndexer (M2) → VectorAssembler (M9) →
-    * weighted RandomForest (M5 stand-in). */
-  def pipeline(seed: Long = 42L, numTrees: Int = 30): Pipeline = {
-    val brandIndexer = new StringIndexer()
-      .setInputCol("p_brand").setOutputCol("brand_idx")
-      .setStringOrderType("frequencyDesc")
-      .setHandleInvalid("keep")
+  /** The stages every pipeline here shares: the category StringIndexer
+    * (freq-ordered, handleInvalid=keep, M1 — unseen serve-time values
+    * get the extra index), then the label StringIndexer (M2) and the
+    * VectorAssembler (M9). */
+  private def featureStages(r: Recipe)
+      : (StringIndexer, Array[PipelineStage]) = {
+    val indexer = new StringIndexer()
+      .setInputCol(r.indexIn).setOutputCol(r.indexOut)
+      .setStringOrderType("frequencyDesc").setHandleInvalid("keep")
     val labelIndexer = new StringIndexer()
-      .setInputCol(LabelCol).setOutputCol("label")
-      .setStringOrderType("frequencyDesc")
-      .setHandleInvalid("error")
+      .setInputCol(r.label).setOutputCol("label")
+      .setStringOrderType("frequencyDesc").setHandleInvalid("error")
     val assembler = new VectorAssembler()
-      .setInputCols(FeatureCols.toArray).setOutputCol("features")
+      .setInputCols(r.featureCols.toArray).setOutputCol("features")
+    (indexer, Array(labelIndexer, assembler))
+  }
+
+  /** Fit the weighted RandomForest (M5 stand-in) behind the shared
+    * stages. `maxBins` is sized from the FITTED category indexer: a
+    * categorical feature needs maxBins ≥ its value count (its labels
+    * plus the keep bucket), so a real-cardinality column (161
+    * `Location Description` values) trains, while an indexer with ≤ 31
+    * labels keeps the default 32 and its model is unchanged. The fitted
+    * indexer enters the pipeline as a transformer, so it is fitted
+    * once. */
+  private def fitForest(r: Recipe, train: DataFrame): PipelineModel = {
+    val (indexer, rest) = featureStages(r)
+    val indexerModel = indexer.fit(train)
     val rf = new RandomForestClassifier()
       .setLabelCol("label").setFeaturesCol("features")
       .setWeightCol("weight")
-      .setNumTrees(numTrees).setMaxDepth(7).setSeed(seed)
-    new Pipeline().setStages(Array(brandIndexer, labelIndexer, assembler, rf))
+      .setNumTrees(r.numTrees).setMaxDepth(7).setSeed(42L)
+      .setMaxBins(math.max(32, indexerModel.labelsArray.head.length + 1))
+    new Pipeline().setStages((indexerModel +: rest) :+ rf).fit(train)
+  }
+
+  /** Train-only weights and densities on both splits (the class-weight
+    * table is computed ONCE), then the forest fit. Returns
+    * (model, train, test). */
+  private def fitSplit(r: Recipe, trainRaw: DataFrame, testRaw: DataFrame)
+      : (PipelineModel, DataFrame, DataFrame) = {
+    val weights = classWeightTable(trainRaw, r.label)
+    def prep(df: DataFrame): DataFrame = {
+      val out = attachWeights(attachDensities(df, trainRaw, r.densities),
+        weights, r.label)
+      if (r.fillNulls)
+        out.na.fill(0.0, r.featureCols.filterNot(_ == r.indexOut))
+      else out
+    }
+    val train = prep(trainRaw)
+    val test = prep(testRaw)
+    (fitForest(r, train), train, test)
   }
 
   /** Boosted-trees variant (M5's gradient-boosting parity path,
@@ -120,14 +194,7 @@ object CrimePipeline {
       validationIndicatorCol: Option[String] = None,
       validationTol: Double = 0.01): Pipeline = {
     import org.apache.spark.ml.classification.{GBTClassifier, OneVsRest}
-    val brandIndexer = new StringIndexer()
-      .setInputCol("p_brand").setOutputCol("brand_idx")
-      .setStringOrderType("frequencyDesc").setHandleInvalid("keep")
-    val labelIndexer = new StringIndexer()
-      .setInputCol(LabelCol).setOutputCol("label")
-      .setStringOrderType("frequencyDesc").setHandleInvalid("error")
-    val assembler = new VectorAssembler()
-      .setInputCols(FeatureCols.toArray).setOutputCol("features")
+    val (brandIndexer, rest) = featureStages(Lineitem)
     val gbt = new GBTClassifier()
       .setLabelCol("label").setFeaturesCol("features")
       .setWeightCol("weight")
@@ -139,7 +206,7 @@ object CrimePipeline {
     val ovr = new OneVsRest().setClassifier(gbt)
       .setLabelCol("label").setFeaturesCol("features")
       .setWeightCol("weight")
-    new Pipeline().setStages(Array(brandIndexer, labelIndexer, assembler, ovr))
+    new Pipeline().setStages((brandIndexer +: rest) :+ ovr)
   }
 
   /** GLOBAL early stopping for the boosted variant (M10,
@@ -204,14 +271,18 @@ object CrimePipeline {
     val engineered = base(spark, dir)
     val (trainRaw, testRaw) = split(engineered, cutoffYear)
     trainRaw.cache()
-    try {
-      val weights = classWeightTable(trainRaw, LabelCol) // computed ONCE
-      val train =
-        attachWeights(withDensities(trainRaw, trainRaw), weights, LabelCol)
-      val test =
-        attachWeights(withDensities(testRaw, trainRaw), weights, LabelCol)
-      val model = pipeline().fit(train)
-      (model, train, test)
-    } finally trainRaw.unpersist() // fitted stats are computed; don't pin
+    try fitSplit(Lineitem, trainRaw, testRaw)
+    finally trainRaw.unpersist() // fitted stats are computed; don't pin
+  }
+
+  /** The reference's entry point 2 (`python xgboost_model.py`) on a
+    * prepared crime frame ([[CrimeEtl.prepare]] output): time split at
+    * `cutoffYear` (`XGBoost.py:139-140`), train-only stats, fit.
+    * Returns (model, train, test). */
+  def fitCrime(prepared: DataFrame, cutoffYear: Int = 2003)
+      : (PipelineModel, DataFrame, DataFrame) = {
+    val (trainRaw, testRaw) =
+      Sampling.timeSplit(prepared, col("ts"), cutoffYear)
+    fitSplit(Crime, trainRaw, testRaw)
   }
 }

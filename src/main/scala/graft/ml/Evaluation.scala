@@ -62,7 +62,7 @@ object Evaluation {
     * For the OneVsRest boosted variant, importances are averaged over the
     * per-class binary GBT models. Feature names come from the pipeline's
     * own VectorAssembler stage (NOT a hardcoded list) so a model with a
-    * different feature recipe — e.g. CrimeMl's 18 columns — can never be
+    * different feature recipe — e.g. the crime recipe's 18 columns — can never be
     * silently mislabeled by zip truncation. */
   def featureImportances(model: PipelineModel): Seq[(String, Double)] = {
     import org.apache.spark.ml.classification.{GBTClassificationModel, OneVsRestModel}

@@ -35,4 +35,10 @@ object shim {
           .sessionState.conf)
     ()
   }
+
+  /** Block until every listener event posted so far has been delivered
+    * (`listenerBus` is `private[spark]`) — a deterministic drain for
+    * listener-based counters, instead of sleeping and hoping. */
+  def drainListenerBus(spark: org.apache.spark.sql.SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 }

@@ -535,12 +535,11 @@ class PropertiesSpec extends SparkSpec {
     assert(SCTest.check(params, prop).passed)
   }
 
-  test("partitioned cluster maintenance == in-memory on ARBITRARY " +
-    "graphs: random corpus/delta/takedown rounds through the " +
-    "label-hashed parquet state read back equal to upsertClusters / " +
-    "retractClusters and the fresh retained-pair rebuild (merges that " +
-    "move rows across buckets, emptied buckets, splits into unlisted " +
-    "buckets — whatever the generator produces)") {
+  test("cluster maintenance on ARBITRARY graphs: upsertClusters == " +
+    "fresh dupClusters over corpus ∪ delta pairs, and upsertClusters " +
+    "then retractClusters == fresh dupClusters over the retained pair " +
+    "subgraph (merges, bridge deletions that split components, unseen " +
+    "batch ids — whatever the generator produces)") {
     val idGen = Gen.chooseNum(1L, 40L)
     val pairGen = for {
       a <- idGen; b <- idGen if a != b
@@ -557,42 +556,25 @@ class PropertiesSpec extends SparkSpec {
     val corpusIds = (1L to 40L).toSeq
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("id", "cluster").as[(Long, Long)].collect().toSet
+    def fresh(pairs: Seq[(Long, Long)], ids: Seq[Long]) =
+      rows(graft.ext.Dedup.dupClusters(pairs.toDF("id_a", "id_b"),
+        ids.toDF("id"), "id"))
     val prop = forAll(gen) { case (cp, dp, ni, del) =>
-      val nb = 8
-      def readLbl(dir: String) = graft.ext.StateStore.readAll(spark,
-        dir, graft.ext.Dedup.ClustersByLabel)
-      def readId(dir: String) = graft.ext.StateStore.readAll(spark,
-        dir, graft.ext.Dedup.ClustersById)
       val clusters0 = graft.ext.Dedup.dupClusters(
         cp.toDF("id_a", "id_b"), corpusIds.toDF("id"), "id")
-      val dir = java.nio.file.Files.createTempDirectory("graft_pprop")
-        .toFile.getAbsolutePath + "/state"
-      graft.ext.Dedup.writeClustersPartitioned(clusters0, dir, "id", nb)
       // upsert round
-      val (dpDf, niDf) = (dp.toDF("id_a", "id_b"), ni.toDF("id"))
-      graft.ext.Dedup.upsertClustersPartitioned(dir, dpDf, niDf, "id",
-        nb)
-      val mem1 = graft.ext.Dedup.upsertClusters(clusters0, dpDf, niDf,
-        "id").localCheckpoint(eager = true)
-      val ok1 = rows(readLbl(dir)) == rows(mem1) &&
-        rows(readId(dir)) == rows(mem1) // co-committed projection agrees
+      val mem1 = graft.ext.Dedup.upsertClusters(clusters0,
+        dp.toDF("id_a", "id_b"), ni.toDF("id"), "id", ordered = false)
+        .localCheckpoint(eager = true)
+      val ok1 = rows(mem1) == fresh(cp ++ dp, (corpusIds ++ ni).distinct)
       // takedown round (persisted pair table = corpus ∪ delta pairs)
-      val pairs1 = (cp ++ dp).toDF("id_a", "id_b")
-      graft.ext.Dedup.retractClustersPartitioned(dir, pairs1,
-        del.toDF("id"), "id", nb)
-      val mem2 = graft.ext.Dedup.retractClusters(mem1, pairs1,
-        del.toDF("id"), "id")
-      val ok2 = rows(readLbl(dir)) == rows(mem2) &&
-        rows(readId(dir)) == rows(mem2)
-      // == fresh components over the retained pair subgraph
+      val mem2 = graft.ext.Dedup.retractClusters(mem1,
+        (cp ++ dp).toDF("id_a", "id_b"), del.toDF("id"), "id")
       val retainedIds = (corpusIds ++ ni).distinct.filterNot(del.contains)
       val retainedPairs = (cp ++ dp).filter { case (a, b) =>
         !del.contains(a) && !del.contains(b)
       }
-      val ok3 = rows(readLbl(dir)) == rows(
-        graft.ext.Dedup.dupClusters(retainedPairs.toDF("id_a", "id_b"),
-          retainedIds.toDF("id"), "id"))
-      ok1 && ok2 && ok3
+      ok1 && rows(mem2) == fresh(retainedPairs, retainedIds)
     }
     assert(SCTest.check(params, prop).passed)
   }

@@ -59,15 +59,31 @@ class AggregatesSpec extends SparkSpec {
     assert(rows(Aggregates.rankedCdfDistributed(tiny, "k", "v")) ==
       rows(Aggregates.rankedCdf(tiny, "k", "v")))
     // real fixture column — many distinct values spread over many
-    // range partitions, several groups per partition boundary
+    // range partitions, several groups per partition boundary. AQE
+    // would coalesce this small input into ONE range partition, which
+    // leaves no prefix chain to merge, so coalescing is off here.
     val li = graft.engine.Tables.lineitem(spark, sf0001)
       .select("l_returnflag", "l_extendedprice")
     def rowsLi(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("l_returnflag", "__v").collect().toSeq
-    assert(rowsLi(Aggregates.rankedCdfDistributed(li, "l_returnflag",
-        "l_extendedprice")) ==
-      rowsLi(Aggregates.rankedCdf(li, "l_returnflag",
-        "l_extendedprice")))
+    val coalesceKey = "spark.sql.adaptive.coalescePartitions.enabled"
+    val prev = spark.conf.get(coalesceKey)
+    try {
+      spark.conf.set(coalesceKey, "false")
+      assert(rowsLi(Aggregates.rankedCdfDistributed(li, "l_returnflag",
+          "l_extendedprice")) ==
+        rowsLi(Aggregates.rankedCdf(li, "l_returnflag",
+          "l_extendedprice")))
+      // BINARY group keys: the merge over the collected subtotals sees
+      // them as Array[Byte] (reference equality), yet each group's
+      // partition subtotals must still chain into ONE prefix
+      val bin = li.select(col("l_returnflag").cast("binary")
+        .as("l_returnflag"), col("l_extendedprice"))
+      assert(rowsLi(Aggregates.rankedCdfDistributed(bin, "l_returnflag",
+          "l_extendedprice")) ==
+        rowsLi(Aggregates.rankedCdf(bin, "l_returnflag",
+          "l_extendedprice")))
+    } finally spark.conf.set(coalesceKey, prev)
   }
 
   test("percentilesFromCdf over a parquet-round-tripped rankedCdf is " +

@@ -6,40 +6,22 @@ import org.apache.spark.sql.functions._
 /** The transactional commit protocol itself (round-12 verdict item 1):
   * crash-anywhere recoverability, the atomic manifest swap, garbage
   * collection, compaction, and the commit-contract checks the old
-  * dynamic-overwrite protocol could not even express.
-  *
-  * The battery is ABSTRACT over the commit point (round-14 verdict
-  * item 1): every test here runs twice — once under the default
-  * [[StateStore.RenameCommitGuard]] (atomic-rename filesystems) and
-  * once under [[StateStore.CasCommitGuard]] (the exclusive-create /
-  * conditional-PUT shape an object-store deployment uses) — so the
-  * crash, torn, race, retention and layout contracts are proven for
-  * BOTH deployment families, not documented for one and assumed for
-  * the other. CAS-only crash windows (torn destination mid-PUT,
-  * copy-vs-delete gap) get additional tests in [[StateStoreCasSpec]]. */
-abstract class StateStoreBattery extends SparkSpec {
+  * dynamic-overwrite protocol could not even express — proven under
+  * the store's one commit point, a no-overwrite atomic rename. */
+class StateStoreSpec extends SparkSpec {
   import spark.implicits._
 
-  /** The commit point this incarnation of the battery runs under. */
-  def guard: StateStore.CommitGuard
-
-  override protected def withFixture(test: NoArgTest) = {
-    val prev = StateStore.setCommitGuard(guard)
-    try super.withFixture(test)
-    finally StateStore.setCommitGuard(prev)
-  }
-
-  protected def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(s"${prefix}_${guard.name}")
+  private def tmp(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix)
       .toFile.getAbsolutePath + "/state"
 
-  protected def fpRows(df: org.apache.spark.sql.DataFrame) =
+  private def fpRows(df: org.apache.spark.sql.DataFrame) =
     df.select("pid", "fp").as[(Long, Long)].collect().toSet
 
   /** 8-hex CRC32 over UTF-8 bytes — the manifest checksum, replicated
     * so specs can author well-formed format-2 bodies (and bodies whose
     * checksum is deliberately the only valid part). */
-  protected def crcHex(s: String): String = {
+  private def crcHex(s: String): String = {
     val c = new java.util.zip.CRC32()
     c.update(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     f"${c.getValue}%08x"
@@ -49,7 +31,7 @@ abstract class StateStoreBattery extends SparkSpec {
     * fixing up) as a format-2 body with a CORRECT checksum: the way a
     * spec isolates one framing check (eof, content) from the crc
     * check that would otherwise fire first. */
-  protected def frame2(afterCrc: Seq[String]): String = {
+  private def frame2(afterCrc: Seq[String]): String = {
     val tail = afterCrc.mkString("", "\n", "\n")
     s"format=2\ncrc=${crcHex(tail)}\n$tail"
   }
@@ -57,7 +39,7 @@ abstract class StateStoreBattery extends SparkSpec {
   /** The committed manifest's lines with the frame (format + crc +
     * eof) stripped — i.e. exactly the content a LEGACY (format 0)
     * writer would have produced for the same snapshot. */
-  protected def manifestContentLines(path: java.nio.file.Path)
+  private def manifestContentLines(path: java.nio.file.Path)
       : Seq[String] = {
     val lines = java.nio.file.Files.readString(path)
       .linesIterator.filter(_.nonEmpty).toSeq
@@ -110,25 +92,41 @@ abstract class StateStoreBattery extends SparkSpec {
     val pairs0 = Seq((1L, 2L), (3L, 4L)).toDF("id_a", "id_b")
     val ids0 = (1L to 6L).toDF("id")
     val clusters0 = Dedup.dupClusters(pairs0, ids0, "id")
-    Dedup.writeClustersPartitioned(clusters0, dir, "id", nb)
+    // the cluster table in both orientations — a label-keyed primary
+    // and an id-keyed projection — held as ONE two-table store
+    def layout(c: org.apache.spark.sql.DataFrame) = {
+      val base = c.select("id", "cluster")
+      Map(
+        "bylbl" -> base.withColumn("pbucket",
+          pmod(hash(col("cluster")), lit(nb))),
+        "byid" -> base.withColumn("pbucket",
+          pmod(hash(col("id")), lit(nb))))
+    }
+    StateStore.create(spark, dir, layout(clusters0), nb)
     def rows(t: String) = StateStore.readAll(spark, dir, t)
       .select("id", "cluster").as[(Long, Long)].collect().toSet
-    val before = rows(Dedup.ClustersByLabel)
-    assert(rows(Dedup.ClustersById) == before)
+    val before = rows("bylbl")
+    assert(rows("byid") == before)
     val newPairs = Seq((2L, 3L), (100L, 5L)).toDF("id_a", "id_b")
     val newIds = Seq(100L, 101L).toDF("id")
+    val merged = Dedup.upsertClusters(clusters0, newPairs, newIds, "id",
+      ordered = false).localCheckpoint(eager = true)
+    // the upsert rewrites every bucket of BOTH tables under one commit
+    def upsert() = StateStore.commit(spark, dir,
+      layout(merged).map { case (t, df) => t -> (df, 0 until nb) })
     StateStore.FailPoints.beforeManifestSwap = true
     try intercept[RuntimeException] {
-      Dedup.upsertClustersPartitioned(dir, newPairs, newIds, "id", nb)
+      upsert()
     } finally StateStore.FailPoints.beforeManifestSwap = false
-    assert(rows(Dedup.ClustersByLabel) == before)
-    assert(rows(Dedup.ClustersById) == before)
+    assert(rows("bylbl") == before)
+    assert(rows("byid") == before)
     // retry directly — no vacuum needed (the commit clears the orphan)
-    Dedup.upsertClustersPartitioned(dir, newPairs, newIds, "id", nb)
-    val expected = Dedup.upsertClusters(clusters0, newPairs, newIds,
-      "id").select("id", "cluster").as[(Long, Long)].collect().toSet
-    assert(rows(Dedup.ClustersByLabel) == expected)
-    assert(rows(Dedup.ClustersById) == expected)
+    upsert()
+    val expected = merged.select("id", "cluster").as[(Long, Long)]
+      .collect().toSet
+    assert(expected != before)
+    assert(rows("bylbl") == expected)
+    assert(rows("byid") == expected)
   }
 
   test("commit REJECTS a merge that writes outside its declared " +
@@ -879,7 +877,7 @@ abstract class StateStoreBattery extends SparkSpec {
 
   /** readAt that does NOT leave a pin behind — for content
     * comparisons in tests that later exercise vacuum. */
-  protected def manifestAt(dir: String, v: Long): StateStore.Manifest = {
+  private def manifestAt(dir: String, v: Long): StateStore.Manifest = {
     val s = StateStore.readAt(spark, dir, v)
     s.release(spark)
     s.manifest
@@ -1217,56 +1215,13 @@ abstract class StateStoreBattery extends SparkSpec {
       (1L to 8L).map(i => i -> i).toSet)
     pinned.release(spark)
   }
-}
-
-/** The battery under the default atomic-rename commit point. */
-class StateStoreSpec extends StateStoreBattery {
-  def guard: StateStore.CommitGuard = StateStore.RenameCommitGuard
-}
-
-/** The battery under the conditional-PUT-shaped commit point an
-  * object-store deployment uses, plus the crash windows that exist
-  * ONLY there: a non-atomic body write can tear the DESTINATION
-  * (rename guard crashes tear only the tmp file), and the copy half
-  * of a copy+delete rename can land while the delete half doesn't. */
-class StateStoreCasSpec extends StateStoreBattery {
-  import spark.implicits._
-  def guard: StateStore.CommitGuard = StateStore.CasCommitGuard
-
-  test("CRASH MID-PUT (torn destination): the half-written manifest " +
-    "at the COMMITTED name classifies torn, reads fall back to the " +
-    "previous snapshot, and the retried cycle clears it and lands") {
-    val nb = 8
-    val dir = tmp("graft_cas_midput")
-    val fps0 = (1L to 20L).map(i => (i, i * 7L)).toDF("pid", "fp")
-    Dedup.writeIdKeyedStatePartitioned(fps0, dir, "pid", nb)
-    val before = fpRows(StateStore.readAll(spark, dir))
-    val batch = Seq((2L, 999L)).toDF("pid", "fp")
-    StateStore.CasCommitGuard.FailPoints.truncateBodyAt = 40L
-    val e =
-      try intercept[RuntimeException] {
-        Dedup.upsertIdKeyedStatePartitioned(dir, batch, "pid", nb)
-      } finally
-        StateStore.CasCommitGuard.FailPoints.truncateBodyAt = -1L
-    assert(e.getMessage.contains("FAILPOINT"))
-    // the torn v2 sits at the COMMITTED name — and is skipped
-    assert(java.nio.file.Files.exists(
-      java.nio.file.Paths.get(dir, "manifest-000000002.txt")))
-    assert(StateStore.current(spark, dir).version == 1L)
-    assert(fpRows(StateStore.readAll(spark, dir)) == before)
-    // retry: publish probes the torn destination, clears it, re-PUTs
-    Dedup.upsertIdKeyedStatePartitioned(dir, batch, "pid", nb)
-    assert(StateStore.current(spark, dir).version == 2L)
-    assert(fpRows(StateStore.readAll(spark, dir)) ==
-      before.filterNot(_._1 == 2L) + (2L -> 999L))
-  }
 
   test("LINE-BOUNDARY TRUNCATION is torn, not silently short: a " +
     "prefix that ends exactly at a newline parses as a syntactically " +
     "valid manifest minus its tail buckets — the eof sentinel is what " +
     "rejects it (round-14 advice; data loss without it)") {
     val nb = 8
-    val dir = tmp("graft_cas_lineb")
+    val dir = tmp("graft_ss_lineb")
     val fps0 = (1L to 40L).map(i => (i, i)).toDF("pid", "fp")
     Dedup.writeIdKeyedStatePartitioned(fps0, dir, "pid", nb)
     val before = fpRows(StateStore.readAll(spark, dir))
@@ -1297,105 +1252,6 @@ class StateStoreCasSpec extends StateStoreBattery {
       before.filterNot(_._1 == 1L) + (1L -> 111L))
   }
 
-  test("CRASH BETWEEN PUT AND SOURCE CLEANUP (the copy+delete gap): " +
-    "the commit IS published — readers see the new version — and the " +
-    "leftover dot-tmp file is garbage vacuum reclaims") {
-    val nb = 8
-    val dir = tmp("graft_cas_gap")
-    val fps0 = (1L to 20L).map(i => (i, i)).toDF("pid", "fp")
-    Dedup.writeIdKeyedStatePartitioned(fps0, dir, "pid", nb)
-    StateStore.CasCommitGuard.FailPoints.beforeSourceCleanup = true
-    val e =
-      try intercept[RuntimeException] {
-        Dedup.upsertIdKeyedStatePartitioned(dir,
-          Seq((5L, 555L)).toDF("pid", "fp"), "pid", nb)
-      } finally
-        StateStore.CasCommitGuard.FailPoints.beforeSourceCleanup = false
-    assert(e.getMessage.contains("FAILPOINT"))
-    // at-least-once surface: the caller saw an error but the commit
-    // LANDED — the retry discipline (re-read current, re-merge) makes
-    // this safe, and the spec pins the landed state explicitly
-    assert(StateStore.current(spark, dir).version == 2L)
-    assert(fpRows(StateStore.readAll(spark, dir)) ==
-      (1L to 20L).map(i => i -> i).toSet
-        .filterNot(_._1 == 5L) + (5L -> 555L))
-    assert(java.nio.file.Files.exists(
-      java.nio.file.Paths.get(dir, ".manifest-2.tmp")))
-    val removed = StateStore.vacuum(spark, dir)
-    assert(removed.contains(".manifest-2.tmp"))
-    assert(fpRows(StateStore.readAll(spark, dir)) ==
-      (1L to 20L).map(i => i -> i).toSet
-        .filterNot(_._1 == 5L) + (5L -> 555L))
-  }
-
-  test("NEGATIVE CONTRAST — a naive copy+delete swap (an object " +
-    "store's actual rename) lets a racing writer silently CLOBBER " +
-    "the winner's manifest: the loss mode the CAS guard's exclusive " +
-    "create exists to prevent, demonstrated rather than asserted") {
-    // the guard S3A-style rename actually gives you: stream tmp to
-    // dst unconditionally (no exclusivity), then delete tmp
-    object NaiveCopyDeleteGuard extends StateStore.CommitGuard {
-      val name = "naive"
-      def swap(fs: org.apache.hadoop.fs.FileSystem,
-          tmp: org.apache.hadoop.fs.Path,
-          dst: org.apache.hadoop.fs.Path): Unit = {
-        val in = fs.open(tmp)
-        val body = try in.readAllBytes() finally in.close()
-        val out = fs.create(dst, true) // overwrite — no claim step
-        try { out.write(body); out.hflush(); out.hsync() }
-        finally out.close()
-        try { fs.delete(tmp, false); () }
-        catch { case _: Throwable => () }
-      }
-      def replace(fs: org.apache.hadoop.fs.FileSystem,
-          tmp: org.apache.hadoop.fs.Path,
-          dst: org.apache.hadoop.fs.Path): Unit = swap(fs, tmp, dst)
-    }
-    val nb = 8
-    val dir = tmp("graft_cas_naive")
-    val fps0 = (1L to 20L).map(i => (i, i)).toDF("pid", "fp")
-    Dedup.writeIdKeyedStatePartitioned(fps0, dir, "pid", nb)
-    val v1Rows = fpRows(StateStore.readAll(spark, dir))
-    // writer B commits v2 normally (the WINNER — pid 7 updated)
-    Dedup.upsertIdKeyedStatePartitioned(dir,
-      Seq((7L, 777L)).toDF("pid", "fp"), "pid", nb)
-    assert(fpRows(StateStore.readAll(spark, dir)) ==
-      v1Rows.filterNot(_._1 == 7L) + (7L -> 777L))
-    // writer A — a lagging racer that resolved v1 before B's commit —
-    // arrives at the swap with ITS OWN v2 body (v1's content, version
-    // bumped; well-framed, so it parses clean)
-    import java.nio.file.{Files, Paths}
-    val c1 = manifestContentLines(Paths.get(dir, "manifest-000000001.txt"))
-      .map(l => if (l.startsWith("version=")) "version=2" else l)
-    val m1 = frame2(c1 :+ s"eof=${c1.size + 2}")
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def staleTmp(name: String): org.apache.hadoop.fs.Path = {
-      val p = Paths.get(dir, name)
-      Files.deleteIfExists(Paths.get(dir, s".$name.crc"))
-      Files.writeString(p, m1)
-      new org.apache.hadoop.fs.Path(p.toString)
-    }
-    val dst = new org.apache.hadoop.fs.Path(dir, "manifest-000000002.txt")
-    // under the REAL guards A loses LOUDLY with B's snapshot intact
-    intercept[RuntimeException] {
-      StateStore.RenameCommitGuard.swap(fs, staleTmp(".naive-a.tmp"), dst)
-    }
-    intercept[RuntimeException] {
-      StateStore.CasCommitGuard.swap(fs, staleTmp(".naive-b.tmp"), dst)
-    }
-    assert(fpRows(StateStore.readAll(spark, dir)) ==
-      v1Rows.filterNot(_._1 == 7L) + (7L -> 777L))
-    // under the NAIVE swap A succeeds — and B's committed update is
-    // silently GONE: v2 now carries A's stale body, reads serve v1's
-    // rows, nobody errored. This is the lost update the commit point
-    // must be an atomic no-overwrite rename or a conditional PUT to
-    // prevent — demonstrated, not asserted.
-    NaiveCopyDeleteGuard.swap(fs, staleTmp(".naive-c.tmp"), dst)
-    assert(StateStore.current(spark, dir).version == 2L)
-    assert(fpRows(StateStore.readAll(spark, dir)) == v1Rows)
-  }
-
   test("EXHAUSTIVE TRUNCATION: EVERY strict byte-prefix of a real " +
     "committed multi-table manifest classifies torn — no prefix " +
     "parses as a silently-smaller snapshot (the framing's whole " +
@@ -1404,7 +1260,7 @@ class StateStoreCasSpec extends StateStoreBattery {
     // a real two-table store so the manifest carries several schema
     // AND bucket lines (the interesting truncation targets)
     val nb = 4
-    val dir = tmp("graft_cas_trunc")
+    val dir = tmp("graft_ss_trunc")
     val a = (1L to 40L).map(i => (i, i)).toDF("id", "v")
       .withColumn("pbucket", pmod(hash(col("id")), lit(nb)))
     val b = (1L to 40L).map(i => (i, -i)).toDF("id", "w")
@@ -1415,7 +1271,7 @@ class StateStoreCasSpec extends StateStoreBattery {
     assert(bytes.length > 100)
     // stage each prefix as another root's v1 manifest; generations
     // are irrelevant — only the parse verdict is under test
-    val root2 = tmp("graft_cas_trunc2")
+    val root2 = tmp("graft_ss_trunc2")
     Files.createDirectories(Paths.get(root2))
     val p2 = Paths.get(root2, "manifest-000000001.txt")
     // the full bytes parse back to the exact committed manifest
@@ -1456,7 +1312,7 @@ class StateStoreCasSpec extends StateStoreBattery {
     "same guarantee it had when format 1 was current") {
     import java.nio.file.{Files, Paths}
     val nb = 4
-    val dir = tmp("graft_cas_trunc1")
+    val dir = tmp("graft_ss_trunc1")
     val a = (1L to 40L).map(i => (i, i)).toDF("id", "v")
       .withColumn("pbucket", pmod(hash(col("id")), lit(nb)))
     StateStore.create(spark, dir, Map("ta" -> a), nb)
@@ -1467,7 +1323,7 @@ class StateStoreCasSpec extends StateStoreBattery {
     val bytes = ("format=1" +: content :+ s"eof=${content.size + 1}")
       .mkString("", "\n", "\n")
       .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    val root2 = tmp("graft_cas_trunc1b")
+    val root2 = tmp("graft_ss_trunc1b")
     Files.createDirectories(Paths.get(root2))
     val p2 = Paths.get(root2, "manifest-000000001.txt")
     Files.write(p2, bytes)
@@ -1502,7 +1358,7 @@ class StateStoreCasSpec extends StateStoreBattery {
     "a wrong version, a foreign table, an invented bucket — can)") {
     import java.nio.file.{Files, Paths}
     val nb = 4
-    val dir = tmp("graft_cas_trunc0")
+    val dir = tmp("graft_ss_trunc0")
     val a = (1L to 40L).map(i => (i, i)).toDF("id", "v")
       .withColumn("pbucket", pmod(hash(col("id")), lit(nb)))
     StateStore.create(spark, dir, Map("ta" -> a), nb)
@@ -1510,7 +1366,7 @@ class StateStoreCasSpec extends StateStoreBattery {
       Paths.get(dir, "manifest-000000001.txt"))
     val bytes = content.mkString("", "\n", "\n")
       .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    val root2 = tmp("graft_cas_trunc0b")
+    val root2 = tmp("graft_ss_trunc0b")
     Files.createDirectories(Paths.get(root2))
     val p2 = Paths.get(root2, "manifest-000000001.txt")
     Files.write(p2, bytes)
@@ -1575,7 +1431,7 @@ class StateStoreCasSpec extends StateStoreBattery {
       Seq("version=1", s"numBuckets=$nBuckets", s"schema.t=$schemaJson") ++
         (0 until nBuckets).map(b => f"bucket.t.$b=gen-${b % 8 + 1}%09d")
     val body = frame2(content :+ s"eof=${content.size + 2}")
-    val root = tmp("graft_cas_wide")
+    val root = tmp("graft_ss_wide")
     Files.createDirectories(Paths.get(root))
     Files.writeString(Paths.get(root, "manifest-000000001.txt"), body)
     // the FIRST parse in a JVM pays one-time costs that have nothing
@@ -1613,7 +1469,7 @@ class StateStoreCasSpec extends StateStoreBattery {
     "manifest is never served, never fallen back past silently, and " +
     "NEVER classified as vacuumable garbage (round-14 advice)") {
     val nb = 8
-    val dir = tmp("graft_cas_fmt")
+    val dir = tmp("graft_ss_fmt")
     val fps0 = (1L to 20L).map(i => (i, i)).toDF("pid", "fp")
     Dedup.writeIdKeyedStatePartitioned(fps0, dir, "pid", nb)
     // a well-framed manifest from a NEWER writer (format 3 — this
@@ -1650,12 +1506,32 @@ class StateStoreCasSpec extends StateStoreBattery {
       java.nio.file.Paths.get(dir, "manifest-000000001.txt")))
   }
 
-  test("MIGRATE torn mid-PUT (the CAS simulation's only replace " +
-    "window): the torn manifest is RESTORED from its intent file on " +
+  /** The state a NON-atomic in-place overwrite leaves when it crashes
+    * mid-body during [[StateStore.migrate]]: the intent file durable,
+    * the manifest at the committed name cut after 40 bytes of its new
+    * body. The store's own replace is one atomic overwrite-rename and
+    * cannot tear, so the spec builds that state by hand — the
+    * pending-restore recovery exists for filesystems whose overwrite
+    * is not atomic. */
+  private def tearMidMigrate(dir: String, v: Long): Unit = {
+    import java.nio.file.{Files, Paths}
+    val e = try intercept[RuntimeException] {
+      StateStore.FailPoints.beforeMigrateReplace = true
+      StateStore.migrate(spark, dir)
+    } finally StateStore.FailPoints.beforeMigrateReplace = false
+    assert(e.getMessage.contains("FAILPOINT"))
+    val intent = Files.readAllBytes(Paths.get(dir, f".manifest-$v%09d.mig"))
+    Files.write(Paths.get(dir, f"manifest-$v%09d.txt"),
+      java.util.Arrays.copyOf(intent, 40))
+    Files.deleteIfExists(Paths.get(dir, f".manifest-$v%09d.txt.crc"))
+  }
+
+  test("MIGRATE torn mid-replace (a non-atomic overwrite's window): " +
+    "the torn manifest is RESTORED from its intent file on " +
     "re-run — committed history recovered, not forfeited to vacuum") {
     import java.nio.file.{Files, Paths}
     val nb = 8
-    val dir = tmp("graft_cas_migtorn")
+    val dir = tmp("graft_ss_migtorn")
     val fps0 = (1L to 20L).map(i => (i, i)).toDF("pid", "fp")
     Dedup.writeIdKeyedStatePartitioned(fps0, dir, "pid", nb) // v1
     Dedup.upsertIdKeyedStatePartitioned(dir,
@@ -1667,13 +1543,9 @@ class StateStoreCasSpec extends StateStoreBattery {
       s"eof=${content.size + 1}").mkString("", "\n", "\n"))
     Files.deleteIfExists(Paths.get(dir, ".manifest-000000001.txt.crc"))
     val v1Before = manifestAt(dir, 1L)
-    // crash mid-PUT while replacing v1 in place: the committed name
-    // is TORN — exactly what a non-atomic overwrite leaves behind
-    StateStore.CasCommitGuard.FailPoints.truncateBodyAt = 40L
-    val e =
-      try intercept[RuntimeException] { StateStore.migrate(spark, dir) }
-      finally StateStore.CasCommitGuard.FailPoints.truncateBodyAt = -1L
-    assert(e.getMessage.contains("FAILPOINT"))
+    // crash mid-replace of v1: the committed name is TORN — exactly
+    // what a non-atomic overwrite leaves behind
+    tearMidMigrate(dir, 1L)
     intercept[StateStore.TornManifestException] {
       StateStore.readAt(spark, dir, 1L)
     }
@@ -1698,7 +1570,7 @@ class StateStoreCasSpec extends StateStoreBattery {
     "snapshot is never forfeited to the race; migrate then restores") {
     import java.nio.file.{Files, Paths}
     val nb = 8
-    val dir = tmp("graft_cas_pendres")
+    val dir = tmp("graft_ss_pendres")
     val fps0 = (1L to 20L).map(i => (i, i)).toDF("pid", "fp")
     Dedup.writeIdKeyedStatePartitioned(fps0, dir, "pid", nb) // v1
     Dedup.upsertIdKeyedStatePartitioned(dir,
@@ -1712,10 +1584,8 @@ class StateStoreCasSpec extends StateStoreBattery {
       s"eof=${content.size + 1}").mkString("", "\n", "\n"))
     Files.deleteIfExists(Paths.get(dir, ".manifest-000000002.txt.crc"))
     val v2Before = manifestAt(dir, 2L)
-    // crash mid-PUT replacing v2 in place: newest torn, intent durable
-    StateStore.CasCommitGuard.FailPoints.truncateBodyAt = 40L
-    try intercept[RuntimeException] { StateStore.migrate(spark, dir) }
-    finally StateStore.CasCommitGuard.FailPoints.truncateBodyAt = -1L
+    // crash mid-replace of v2: newest torn, intent durable
+    tearMidMigrate(dir, 2L)
     // reads degrade loudly to v1 — the documented torn-newest posture
     assert(StateStore.current(spark, dir).version == 1L)
     // THE RACE: vacuum runs before the migrate re-run, at the default
@@ -1747,7 +1617,7 @@ class StateStoreCasSpec extends StateStoreBattery {
     "version with nothing lost") {
     import java.nio.file.{Files, Paths}
     val nb = 8
-    val dir = tmp("graft_cas_commitpend")
+    val dir = tmp("graft_ss_commitpend")
     val fps0 = (1L to 20L).map(i => (i, i)).toDF("pid", "fp")
     Dedup.writeIdKeyedStatePartitioned(fps0, dir, "pid", nb) // v1
     Dedup.upsertIdKeyedStatePartitioned(dir,
@@ -1759,9 +1629,7 @@ class StateStoreCasSpec extends StateStoreBattery {
     Files.writeString(p2, ("format=1" +: content :+
       s"eof=${content.size + 1}").mkString("", "\n", "\n"))
     Files.deleteIfExists(Paths.get(dir, ".manifest-000000002.txt.crc"))
-    StateStore.CasCommitGuard.FailPoints.truncateBodyAt = 40L
-    try intercept[RuntimeException] { StateStore.migrate(spark, dir) }
-    finally StateStore.CasCommitGuard.FailPoints.truncateBodyAt = -1L
+    tearMidMigrate(dir, 2L)
     // current falls back to v1, so a commit would target v2 — and
     // gen-2 is NOT a crashed-commit orphan: the pending restore's
     // intent references it. The commit must refuse BEFORE clearing it.

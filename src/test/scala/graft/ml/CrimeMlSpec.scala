@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
 class CrimeMlSpec extends SparkSpec {
 
   private lazy val prepared = CrimeEtl.prepare(CrimeFixture.raw(spark))
-  private lazy val fitted = CrimeMl.fit(prepared, cutoffYear = 2003)
+  private lazy val fitted = CrimePipeline.fitCrime(prepared, cutoffYear = 2003)
 
   test("null Beats survive cleaning and are fill-0'd before assembly " +
     "(XGBoost.py:232-233 residual fillna)") {
@@ -24,7 +24,7 @@ class CrimeMlSpec extends SparkSpec {
 
   test("18-feature contract: vector arity matches the reference exactly") {
     val (model, _, test) = fitted
-    assert(CrimeMl.FeatureCols.length == 18) // XGBoost.py:195-202
+    assert(CrimePipeline.CrimeFeatureCols.length == 18) // XGBoost.py:195-202
     val v = model.transform(test).select("features").head()
       .getAs[Vector](0)
     assert(v.size == 18) // Stramlit_app.py:135 serve-time assert
@@ -63,5 +63,29 @@ class CrimeMlSpec extends SparkSpec {
       .asInstanceOf[org.apache.spark.ml.feature.StringIndexerModel]
       .labelsArray.head.length
     assert(locIdx == seenCount.toDouble) // the reserved unseen bucket
+  }
+
+  test("fits on real-cardinality locations: 161+ distinct Location " +
+    "Description values size the forest's maxBins from the fitted " +
+    "indexer instead of failing against the default 32") {
+    import org.apache.spark.sql.expressions.Window
+    // 4 replicas of every prepared row spread over 170 location
+    // strings: ~300 train rows. (A forest caps its bins at the number
+    // of training rows, so the fixture keeps rows > values, as the
+    // real extract does.)
+    val wide = prepared.crossJoin(spark.range(4).toDF("r"))
+      .withColumn("Location Description", concat(lit("LOC "),
+        (row_number().over(Window.orderBy(col("r"), col("ID"))) % 170)
+          .cast("string")))
+      .drop("r")
+    val (model, _, test) = CrimePipeline.fitCrime(wide, cutoffYear = 2003)
+    val nLoc = model.stages.head
+      .asInstanceOf[org.apache.spark.ml.feature.StringIndexerModel]
+      .labelsArray.head.length
+    assert(nLoc >= 161)
+    val rf = model.stages.last.asInstanceOf[
+      org.apache.spark.ml.classification.RandomForestClassificationModel]
+    assert(rf.getMaxBins == nLoc + 1)
+    assert(model.transform(test).count() == test.count())
   }
 }

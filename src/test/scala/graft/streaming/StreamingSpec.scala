@@ -529,10 +529,11 @@ class StreamingSpec extends SparkSpec {
 
   test("COMPOSED streaming lifecycle (round-12 item 4): ONE scenario " +
     "drives arriving docs through flags -> cluster assignment -> " +
-    "upsert deltas folded into the TRANSACTIONAL partitioned state -> " +
-    "a streamed takedown, and the final persisted index equals the " +
-    "batch chain on the same inputs and the fresh rebuild over the " +
-    "retained docs (withheld-tail contract stated per level)") {
+    "streamed upsert deltas folded by upsertPostingsIndex -> a " +
+    "streamed takedown folded by retractPostingsIndex, and the final " +
+    "index equals the batch chain on the same inputs and the fresh " +
+    "rebuild over the retained docs (withheld-tail contract stated " +
+    "per level)") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     val docs = Tables.documents(spark, sf0001)
@@ -541,7 +542,7 @@ class StreamingSpec extends SparkSpec {
     val maxId = docs.agg(max(col("doc_id"))).collect()(0).getLong(0)
     // ---- persisted corpus state the stream runs against: text index
     // + cluster table (the flags/assignment probe side), fingerprint
-    // postings in the partitioned StateStore (the maintained state) ----
+    // postings index (the maintained state) ----
     val shIndex = graft.ext.Dedup.corpusShingleIndex(corpus, "doc_id",
       "text", k = 3, maxDf = 100).localCheckpoint(eager = true)
     val clusters0 = graft.ext.Dedup.dupClusters(
@@ -553,11 +554,6 @@ class StreamingSpec extends SparkSpec {
       .localCheckpoint(eager = true)
     val idx0 = graft.ext.Dedup.corpusFingerprintIndex(corpusFps,
       bits = 32, slices = 4)._1.localCheckpoint(eager = true)
-    val nb = 16
-    val dir = java.nio.file.Files.createTempDirectory("graft_slife")
-      .toFile.getAbsolutePath + "/postings"
-    graft.ext.Dedup.writePostingsIndexPartitioned(idx0, dir,
-      Seq("sl", "sv"), nb)
     // ---- level 1, FLAGS (one windowed agg => the max-event-time
     // doc's window may withhold): stream == batch on closed docs ----
     val batchFlags = graft.ext.Dedup.incrementalFlags(arriving, shIndex,
@@ -591,18 +587,17 @@ class StreamingSpec extends SparkSpec {
     assert(closedIds.nonEmpty && closedIds.forall(id =>
       streamedAssign.get(id).contains(batchAssign(id))))
     // ---- level 3, UPSERT DELTAS (stateless map-only feed => NO
-    // withheld tail) folded into the partitioned state through the
-    // atomic manifest swap ----
+    // withheld tail) folded into the maintained index ----
     val upsertFeed = StreamingOps.runStreamingDocs(spark, sf0001,
       s => StreamingOps.streamingUpsertPostings(
         s.filter(col("doc_id") % 5 === 3), bits = 32, slices = 4),
       "t_life_upsert").localCheckpoint(eager = true)
-    graft.ext.Dedup.upsertPostingsIndexPartitioned(dir, upsertFeed,
-      Seq("sl", "sv"), nb)
+    val idx1 = graft.ext.Dedup.upsertPostingsIndex(idx0, upsertFeed,
+      Seq("sl", "sv")).localCheckpoint(eager = true)
     // ---- level 4, TAKEDOWN (stateless stream-static join => NO
     // withheld tail): deletion ids arrive as a stream, their deltas
     // derive from the post-upsert fingerprint table, and the
-    // retraction commits through the same swap ----
+    // retraction folds into the upserted index ----
     val fps1 = corpusFps.unionByName(
         graft.ext.Multimodal.blockhashFingerprints(
           graft.ext.Multimodal.mediaTable(arriving), "doc_id",
@@ -614,10 +609,9 @@ class StreamingSpec extends SparkSpec {
           .select(col("doc_id").as("pid")),
         fps1, bits = 32, slices = 4),
       "t_life_takedown").localCheckpoint(eager = true)
-    graft.ext.Dedup.retractPostingsIndexPartitioned(dir, takedownFeed,
-      Seq("sl", "sv"), nb)
-    // ---- final state: the partitioned store equals the in-memory
-    // batch chain (q251 upsert then q252 takedown) AND the fresh
+    // ---- final state: the streamed fold equals the batch chain
+    // (q251 upsert then q252 takedown over batch-derived postings) AND
+    // the fresh
     // rebuild over the retained docs — the whole streamed lifecycle
     // left exactly the state the batch lifecycle leaves ----
     def rows(df: org.apache.spark.sql.DataFrame) =
@@ -632,7 +626,8 @@ class StreamingSpec extends SparkSpec {
       graft.ext.Dedup.fingerprintPostings(
         fps1.filter(col("pid") % 7 === 2), bits = 32, slices = 4),
       Seq("sl", "sv"))
-    val finalState = rows(graft.ext.StateStore.readAll(spark, dir))
+    val finalState = rows(graft.ext.Dedup.retractPostingsIndex(idx1,
+      takedownFeed, Seq("sl", "sv")))
     assert(finalState == rows(batchChain))
     val retainedFps = graft.ext.Multimodal.blockhashFingerprints(
       graft.ext.Multimodal.mediaTable(
@@ -643,18 +638,17 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("COMPOSED streamed CLUSTER lifecycle (round-13 item 2): " +
-    "streamed assignment-delta pairs fold through the TWO-TABLE " +
-    "transactional store (upsertClustersPartitioned), a streamed " +
-    "takedown folds through retractClustersPartitioned, and the final " +
-    "ClustersByLabel == ClustersById == the in-memory batch chain == " +
-    "the fresh rebuild over the retained pair subgraph") {
+    "streamed assignment-delta pairs fold through upsertClusters, a " +
+    "streamed takedown folds through retractClusters, and the final " +
+    "table == the batch chain == the fresh rebuild over the retained " +
+    "pair subgraph") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     val docs = Tables.documents(spark, sf0001)
     val corpus = docs.filter(col("doc_id") % 5 =!= 3)
     val arriving = docs.filter(col("doc_id") % 5 === 3)
     // ---- persisted corpus state: shingle index (the stream's probe
-    // side), pair table, and the TWO-TABLE partitioned cluster store ----
+    // side), pair table, and the cluster table (the maintained state) ----
     val shIndex = graft.ext.Dedup.corpusShingleIndex(corpus, "doc_id",
       "text", k = 3, maxDf = 100).localCheckpoint(eager = true)
     val corpusPairs = graft.ext.Dedup.jaccardPairs(corpus, "doc_id",
@@ -662,15 +656,11 @@ class StreamingSpec extends SparkSpec {
       .select("id_a", "id_b").localCheckpoint(eager = true)
     val clusters0 = graft.ext.Dedup.dupClusters(corpusPairs,
       corpus.select("doc_id"), "doc_id").localCheckpoint(eager = true)
-    val nb = 16
-    val dir = java.nio.file.Files.createTempDirectory("graft_sclife")
-      .toFile.getAbsolutePath + "/clusters"
-    graft.ext.Dedup.writeClustersPartitioned(clusters0, dir, "doc_id", nb)
     // ---- streamed ARRIVALS: the flags pipeline's (id_a, id_b) pairs
     // are exactly the delta edges the cluster upsert folds in (one
     // windowed agg => the trailing doc's window may withhold; whatever
-    // DID emit is the delta both the partitioned and the in-memory
-    // chain consume, so the three-way equality is exact) ----
+    // DID emit is the delta both the streamed and the batch chain
+    // consume, so the three-way equality is exact) ----
     val streamedPairs = StreamingOps.runStreamingDocs(spark, sf0001,
       s => StreamingOps.streamingIncrementalFlags(
         s.filter(col("doc_id") % 5 === 3), shIndex,
@@ -678,38 +668,39 @@ class StreamingSpec extends SparkSpec {
       "t_clife_pairs").select("id_a", "id_b")
       .localCheckpoint(eager = true)
     assert(streamedPairs.count() > 0)
-    val rep = graft.ext.Dedup.upsertClustersPartitioned(dir,
-      streamedPairs, arriving.select("doc_id"), "doc_id", nb)
-    assert(rep.touched.nonEmpty && rep.projTouched.nonEmpty)
+    // the lifecycle chains' mid-chain form (ordered = false, as in
+    // q248/q260); the batch chain below keeps the ordered default
+    val clusters1 = graft.ext.Dedup.upsertClusters(clusters0,
+        streamedPairs, arriving.select("doc_id"), "doc_id",
+        ordered = false)
+      .localCheckpoint(eager = true)
     // ---- streamed TAKEDOWN ids (stateless map-only feed => NO
-    // withheld tail) retract through the same two-table commit; the
-    // persisted pair table (corpus ∪ streamed deltas) is the source
-    // of truth the re-cluster runs over ----
+    // withheld tail) retract from the upserted table; the persisted
+    // pair table (corpus ∪ streamed deltas) is the source of truth the
+    // re-cluster runs over ----
     val delIds = StreamingOps.runStreamingDocs(spark, sf0001,
       s => s.filter(col("doc_id") % 7 === 2).select("doc_id"),
       "t_clife_del").localCheckpoint(eager = true)
     assert(delIds.count() > 0)
     val pairTable = corpusPairs.unionByName(streamedPairs)
       .localCheckpoint(eager = true)
-    graft.ext.Dedup.retractClustersPartitioned(dir, pairTable, delIds,
-      "doc_id", nb)
-    // ---- final state: BOTH orientations of the partitioned store
-    // agree with each other, with the in-memory batch chain (q243-
-    // style upsert then q246-style retract on the same deltas), and
-    // with the fresh rebuild over the retained pair subgraph ----
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select(col("doc_id"), col("cluster"))
         .as[(Long, Long)].collect().toSet
-    val byLabel = rows(graft.ext.StateStore.readAll(spark, dir,
-      graft.ext.Dedup.ClustersByLabel))
-    val byId = rows(graft.ext.StateStore.readAll(spark, dir,
-      graft.ext.Dedup.ClustersById))
-    assert(byLabel == byId) // the projection never disagrees
+    val streamed = rows(graft.ext.Dedup.retractClusters(clusters1,
+      pairTable, delIds, "doc_id", ordered = false))
+    // ---- final state: the streamed fold equals the batch chain
+    // (q243-style upsert then q246-style retract, takedown ids derived
+    // in batch) and the fresh rebuild over the retained pair
+    // subgraph ----
+    val batchDel = docs.filter(col("doc_id") % 7 === 2).select("doc_id")
+    assert(delIds.as[Long].collect().toSet ==
+      batchDel.as[Long].collect().toSet)
     val batchChain = rows(graft.ext.Dedup.retractClusters(
       graft.ext.Dedup.upsertClusters(clusters0, streamedPairs,
         arriving.select("doc_id"), "doc_id"),
-      pairTable, delIds, "doc_id"))
-    assert(byLabel == batchChain)
+      pairTable, batchDel, "doc_id"))
+    assert(streamed == batchChain)
     val retained = docs.filter(col("doc_id") % 7 =!= 2)
       .select("doc_id").localCheckpoint(eager = true)
     val retainedPairs = pairTable
@@ -719,7 +710,7 @@ class StreamingSpec extends SparkSpec {
         "left_semi")
     val fresh = rows(graft.ext.Dedup.dupClusters(retainedPairs,
       retained, "doc_id"))
-    assert(byLabel == fresh)
-    assert(byLabel.nonEmpty)
+    assert(streamed == fresh)
+    assert(streamed.nonEmpty)
   }
 }
