@@ -13,16 +13,20 @@ import graft.engine._
   * extracts, cyclic encoding, count-encoding densities, string index).
   *
   * Key restructure vs the reference (SURVEY.md §3.2): no collect-to-driver
-  * boundary — StringIndexer → weight join → VectorAssembler →
-  * RandomForestClassifier all run on executors; only the fitted model
-  * (KB-scale) reaches the driver. RandomForest replaces XGBoost (no
+  * boundary for the data — density lookup → StringIndexer → weight
+  * lookup → VectorAssembler → RandomForestClassifier all run on
+  * executors; only fitted statistics reach the driver: the forest
+  * (KB-scale), the density stage's count tables (|distinct(key)| entries
+  * each) and the per-class counts. RandomForest replaces XGBoost (no
   * xgboost4j offline; the reference's own first model family,
   * `README.md:118-121`); class weights go in as a `weightCol` instead of a
   * per-row numpy array (`XGBoost.py:247-257`).
   *
   * Leakage discipline (`XGBoost.py:156,168-187`): indexers and density
   * counts are fitted on TRAIN only; test rows get `handleInvalid="keep"`
-  * indices and 0-filled densities.
+  * indices and 0 densities. The density counts are a fitted stage
+  * ([[DensityModel]]) that leads the pipeline, so serving one row is a
+  * plain `model.transform` with no access to the training data.
   *
   * Two recipes ([[Recipe]]) share ONE definition of the feature stages,
   * the density encodings and the forest fit: the fixture-table pipeline
@@ -95,34 +99,46 @@ object CrimePipeline {
     (df.filter(col("d_year") <= cutoffYear),
       df.filter(col("d_year") > cutoffYear))
 
-  /** Attach train-only density features (count encodings) to any frame. */
+  /** Attach train-only density features (count encodings) to any frame
+    * by broadcast joins: the reference the fitted [[DensityModel]] stage
+    * is checked against. */
   def withDensities(target: DataFrame, train: DataFrame): DataFrame =
-    attachDensities(target, train, Lineitem.densities)
-
-  private def attachDensities(target: DataFrame, train: DataFrame,
-      keys: Seq[(String, String)]): DataFrame =
-    keys.foldLeft(target) { case (df, (key, out)) =>
+    Lineitem.densities.foldLeft(target) { case (df, (key, out)) =>
       Density.attachCount(df, train.select(key), key, out)
     }
 
+  /** Per-class training row counts: ONE collect of a ≤|classes|-row
+    * table. */
+  private def classCounts(train: DataFrame, labelCol: String)
+      : Seq[(Any, Long)] =
+    train.groupBy(labelCol).agg(count(lit(1))).collect()
+      .map(r => r.get(0) -> r.getLong(1)).toSeq
+
   /** Inverse-frequency class-weight table clipped to [0.1, 5.0]
-    * (`XGBoost.py:247-257`): n_classes rows, computed ONCE per training
-    * run and broadcast to every consumer. */
-  def classWeightTable(train: DataFrame, labelCol: String): DataFrame = {
-    val counts = train.groupBy(labelCol).agg(count(lit(1)).as("cls_n"))
-    val total = train.count().toDouble
-    val nClasses = counts.count().toDouble
-    counts.withColumn("weight",
-      least(lit(5.0), greatest(lit(0.1),
-        lit(total) / (lit(nClasses) * col("cls_n")))))
-      .select(col(labelCol), col("weight"))
+    * (`XGBoost.py:247-257`): n_classes (label, weight) pairs, computed ONCE
+    * per training run on the driver from one collect of the class counts,
+    * so no consumer re-aggregates `train`. */
+  def classWeightTable(train: DataFrame, labelCol: String)
+      : Seq[(Any, Double)] =
+    weightsOf(classCounts(train, labelCol))
+
+  private def weightsOf(counts: Seq[(Any, Long)]): Seq[(Any, Double)] = {
+    val total = counts.map(_._2).sum.toDouble
+    val nClasses = counts.length.toDouble
+    counts.map { case (label, n) =>
+      label -> math.min(5.0, math.max(0.1, total / (nClasses * n)))
+    }
   }
 
-  /** Attach a precomputed weight table as a weightCol (broadcast). */
-  def attachWeights(df: DataFrame, weights: DataFrame,
+  /** Attach a class-weight table as a weightCol: a projection over its
+    * ≤|classes| entries, so it adds no join and no job; a label without a
+    * weight (null) weighs 1.0. */
+  def attachWeights(df: DataFrame, weights: Seq[(Any, Double)],
       labelCol: String): DataFrame =
-    df.join(broadcast(weights), Seq(labelCol), "left")
-      .na.fill(1.0, Seq("weight"))
+    df.withColumn("weight", weights.foldLeft(lit(1.0)) {
+      case (rest, (label, w)) =>
+        when(col(labelCol) === lit(label), w).otherwise(rest)
+    })
 
   def withClassWeights(df: DataFrame, train: DataFrame): DataFrame =
     attachWeights(df, classWeightTable(train, LabelCol), LabelCol)
@@ -144,41 +160,56 @@ object CrimePipeline {
     (indexer, Array(labelIndexer, assembler))
   }
 
-  /** Fit the weighted RandomForest (M5 stand-in) behind the shared
-    * stages. `maxBins` is sized from the FITTED category indexer: a
-    * categorical feature needs maxBins ≥ its value count (its labels
-    * plus the keep bucket), so a real-cardinality column (161
-    * `Location Description` values) trains, while an indexer with ≤ 31
-    * labels keeps the default 32 and its model is unchanged. The fitted
-    * indexer enters the pipeline as a transformer, so it is fitted
-    * once. */
-  private def fitForest(r: Recipe, train: DataFrame): PipelineModel = {
+  /** Fit the weighted RandomForest (M5 stand-in) behind the fitted
+    * density stage and the shared stages. `maxBins` is sized from the
+    * FITTED category indexer: a categorical feature needs maxBins ≥ its
+    * value count (its labels plus the keep bucket), so a
+    * real-cardinality column (161 `Location Description` values) trains,
+    * while an indexer with ≤ 31 labels keeps the default 32 and its model
+    * is unchanged. A forest also caps its bins at the training row
+    * count, so when the value count exceeds `nTrain` the index is fitted
+    * as an ordered numeric feature instead. The fitted indexer enters the
+    * pipeline as a transformer, so it is fitted once. */
+  private def fitForest(r: Recipe, densities: DensityModel,
+      train: DataFrame, nTrain: Long): PipelineModel = {
     val (indexer, rest) = featureStages(r)
     val indexerModel = indexer.fit(train)
+    val values = indexerModel.labelsArray.head.length + 1
+    val categorical = values <= nTrain
+    val ordered =
+      if (categorical) Nil
+      else Seq(new OrderedFeatures().setInputCols(Array(r.indexOut)))
     val rf = new RandomForestClassifier()
       .setLabelCol("label").setFeaturesCol("features")
       .setWeightCol("weight")
       .setNumTrees(r.numTrees).setMaxDepth(7).setSeed(42L)
-      .setMaxBins(math.max(32, indexerModel.labelsArray.head.length + 1))
-    new Pipeline().setStages((indexerModel +: rest) :+ rf).fit(train)
+      .setMaxBins(if (categorical) math.max(32, values) else 32)
+    new Pipeline()
+      .setStages(Array(densities, indexerModel) ++ ordered ++ rest :+ rf)
+      .fit(train)
   }
 
-  /** Train-only weights and densities on both splits (the class-weight
-    * table is computed ONCE), then the forest fit. Returns
-    * (model, train, test). */
+  /** Train-only densities and weights on both splits — the density stage
+    * and the class counts are fitted ONCE, from one collect each — then
+    * the forest fit; the density stage leads the fitted pipeline, so a
+    * raw row is served by `model.transform`. Returns (model, train,
+    * test). */
   private def fitSplit(r: Recipe, trainRaw: DataFrame, testRaw: DataFrame)
       : (PipelineModel, DataFrame, DataFrame) = {
-    val weights = classWeightTable(trainRaw, r.label)
+    val counts = classCounts(trainRaw, r.label)
+    val weights = weightsOf(counts)
+    val densities = DensityModel.fit(trainRaw, r.densities)
     def prep(df: DataFrame): DataFrame = {
-      val out = attachWeights(attachDensities(df, trainRaw, r.densities),
-        weights, r.label)
+      // a null key filled to 0 below counts as key 0 when the pipeline
+      // re-applies the stage; no District, Beat or Community Area is 0
+      val out = attachWeights(densities.transform(df), weights, r.label)
       if (r.fillNulls)
         out.na.fill(0.0, r.featureCols.filterNot(_ == r.indexOut))
       else out
     }
     val train = prep(trainRaw)
     val test = prep(testRaw)
-    (fitForest(r, train), train, test)
+    (fitForest(r, densities, train, counts.map(_._2).sum), train, test)
   }
 
   /** Boosted-trees variant (M5's gradient-boosting parity path,

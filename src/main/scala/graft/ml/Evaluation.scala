@@ -126,9 +126,17 @@ object Evaluation {
       .agg(avg(col("ll"))).head().getDouble(0)
   }
 
-  /** Label mapping (M3, `XGBoost.py:160-163`): index → original label. */
-  def labelMapping(model: PipelineModel): Seq[(Int, String)] = {
-    val idx = model.stages(1).asInstanceOf[StringIndexerModel]
-    idx.labelsArray.head.zipWithIndex.map { case (l, i) => (i, l) }.toSeq
-  }
+  /** The pipeline's fitted StringIndexerModel that writes `outputCol`,
+    * found by role, not by stage position. */
+  def indexer(model: PipelineModel, outputCol: String): StringIndexerModel =
+    model.stages.collectFirst {
+      case s: StringIndexerModel if s.getOutputCol == outputCol => s
+    }.getOrElse(throw new IllegalArgumentException(
+      s"pipeline has no StringIndexerModel writing $outputCol"))
+
+  /** Label mapping (M3, `XGBoost.py:160-163`): index → original label,
+    * in index order. */
+  def labelMapping(model: PipelineModel): Seq[(Int, String)] =
+    indexer(model, "label").labelsArray.head.zipWithIndex
+      .map { case (l, i) => (i, l) }.toSeq
 }

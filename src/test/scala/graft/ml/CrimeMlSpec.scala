@@ -2,6 +2,7 @@ package graft.ml
 
 import graft.SparkSpec
 import graft.engine.{CrimeEtl, CrimeFixture}
+import org.apache.spark.ml.PipelineModel
 import org.apache.spark.ml.linalg.Vector
 import org.apache.spark.sql.functions._
 
@@ -59,8 +60,7 @@ class CrimeMlSpec extends SparkSpec {
     val out = model.transform(unseen)
     assert(out.count() == 1) // keep: extra index bucket, no error
     val locIdx = out.select("Location_Index").head().getDouble(0)
-    val seenCount = model.stages.head
-      .asInstanceOf[org.apache.spark.ml.feature.StringIndexerModel]
+    val seenCount = Evaluation.indexer(model, "Location_Index")
       .labelsArray.head.length
     assert(locIdx == seenCount.toDouble) // the reserved unseen bucket
   }
@@ -68,24 +68,42 @@ class CrimeMlSpec extends SparkSpec {
   test("fits on real-cardinality locations: 161+ distinct Location " +
     "Description values size the forest's maxBins from the fitted " +
     "indexer instead of failing against the default 32") {
+    import org.apache.spark.ml.attribute.{AttributeGroup, NominalAttribute}
     import org.apache.spark.sql.expressions.Window
-    // 4 replicas of every prepared row spread over 170 location
-    // strings: ~300 train rows. (A forest caps its bins at the number
-    // of training rows, so the fixture keeps rows > values, as the
-    // real extract does.)
-    val wide = prepared.crossJoin(spark.range(4).toDF("r"))
-      .withColumn("Location Description", concat(lit("LOC "),
-        (row_number().over(Window.orderBy(col("r"), col("ID"))) % 170)
-          .cast("string")))
-      .drop("r")
-    val (model, _, test) = CrimePipeline.fitCrime(wide, cutoffYear = 2003)
-    val nLoc = model.stages.head
-      .asInstanceOf[org.apache.spark.ml.feature.StringIndexerModel]
-      .labelsArray.head.length
-    assert(nLoc >= 161)
-    val rf = model.stages.last.asInstanceOf[
-      org.apache.spark.ml.classification.RandomForestClassificationModel]
-    assert(rf.getMaxBins == nLoc + 1)
-    assert(model.transform(test).count() == test.count())
+    // 4 replicas of every prepared row (~300 train rows), spread over
+    // 170 location strings, or over one location per row. A forest caps
+    // its bins at the number of training rows, so 170 values stay
+    // categorical, while one value per row (more values + the keep
+    // bucket than rows) must fall back to an ordered numeric index.
+    for ((locations, categorical) <- Seq(170 -> true, Int.MaxValue -> false)) {
+      val wide = prepared.crossJoin(spark.range(4).toDF("r"))
+        .withColumn("Location Description", concat(lit("LOC "),
+          (row_number().over(Window.orderBy(col("r"), col("ID"))) %
+            locations).cast("string")))
+        .drop("r")
+      val (model, train, test) =
+        CrimePipeline.fitCrime(wide, cutoffYear = 2003)
+      val nLoc = Evaluation.indexer(model, "Location_Index")
+        .labelsArray.head.length
+      assert(nLoc >= 161)
+      assert((nLoc + 1 <= train.count()) == categorical, s"nLoc=$nLoc")
+      val rf = model.stages.last.asInstanceOf[
+        org.apache.spark.ml.classification.RandomForestClassificationModel]
+      assert(rf.getMaxBins == (if (categorical) nLoc + 1 else 32))
+      val out = model.transform(test)
+      val loc = AttributeGroup.fromStructField(out.schema("features"))
+        .getAttr("Location_Index")
+      assert(loc.isInstanceOf[NominalAttribute] == categorical)
+      assert(out.count() == test.count())
+      // both shapes persist: the density stage over double and int keys,
+      // and the ordered-index stage
+      val dir = java.nio.file.Files.createTempDirectory("graft-crime")
+        .toString + "/m"
+      model.write.overwrite().save(dir)
+      def predictions(m: PipelineModel): Seq[Double] =
+        m.transform(test).select("prediction").collect()
+          .map(_.getDouble(0)).toSeq.sorted
+      assert(predictions(PipelineModel.load(dir)) == predictions(model))
+    }
   }
 }

@@ -2,6 +2,7 @@ package graft.ml
 
 import graft.SparkSpec
 import org.apache.spark.ml.PipelineModel
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Golden ML invariants (SURVEY.md §5.2): stochastic model ⇒ no exact
@@ -9,6 +10,24 @@ import org.apache.spark.sql.functions._
 class MlSpec extends SparkSpec {
 
   private lazy val fitted = CrimePipeline.fit(spark, sf0001, cutoffYear = 1997)
+
+  // a serve request's raw columns: no label/category column — serving
+  // derives it from p_type
+  private val rawCols = Seq("l_orderkey", "l_partkey", "l_suppkey",
+    "l_quantity", "l_extendedprice", "l_discount", "l_shipdate", "p_brand",
+    "p_size", "p_retailprice", "p_type")
+
+  /** The first test row as a one-row local request, as a server builds
+    * it from an incoming record. */
+  private def localRequest(test: DataFrame): DataFrame = {
+    val raw = test.select(rawCols.map(col): _*)
+    spark.createDataFrame(java.util.List.of(raw.head()), raw.schema)
+  }
+
+  private def servedPrediction(model: PipelineModel, request: DataFrame,
+      train: DataFrame): Double =
+    Serve.predictOne(spark, model, request, train)
+      .select("prediction").head().getDouble(0)
 
   test("pipeline fits; accuracy beats majority-class floor") {
     val (model, _, test) = fitted
@@ -46,7 +65,7 @@ class MlSpec extends SparkSpec {
   }
 
   test("label mapping round-trips through persistence") {
-    val (model, _, test) = fitted
+    val (model, train, test) = fitted
     val dir = java.nio.file.Files.createTempDirectory("graft-model")
       .toString + "/m"
     model.write.overwrite().save(dir)
@@ -57,6 +76,11 @@ class MlSpec extends SparkSpec {
     val b = loaded.transform(test).select("prediction")
       .collect().map(_.getDouble(0)).toSeq
     assert(a == b)
+    // the loaded model carries its fitted densities: it serves a request
+    // without the training frame, and serves it as the original does
+    val request = localRequest(test)
+    assert(servedPrediction(loaded, request, train = null) ==
+      servedPrediction(model, request, train))
   }
 
   test("label mapping JSON sink/source round-trip (S4/S8)") {
@@ -102,13 +126,8 @@ class MlSpec extends SparkSpec {
 
   test("train/serve parity: single-row serve equals batch transform") {
     val (model, train, test) = fitted
-    // note: no label/category column — serving derives it from p_type
-    val rawCols = Seq("l_orderkey", "l_partkey", "l_suppkey", "l_quantity",
-      "l_extendedprice", "l_discount", "l_shipdate", "p_brand", "p_size",
-      "p_retailprice", "p_type")
     val oneRaw = test.select(rawCols.map(col): _*).limit(1)
-    val served = Serve.predictOne(spark, model, oneRaw, train)
-      .select("prediction").head().getDouble(0)
+    val served = servedPrediction(model, oneRaw, train)
     val batch = model.transform(test.limit(1))
       .select("prediction").head().getDouble(0)
     assert(served == batch)
@@ -184,5 +203,66 @@ class MlSpec extends SparkSpec {
     val leaked = test.join(trainKeys, Seq("l_suppkey"), "left_anti")
       .filter(col("supp_density") =!= 0).count()
     assert(leaked == 0)
+  }
+
+  test("single-row serving runs no Spark job: a one-row local request " +
+      "folds through the fitted stages without touching training data") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.graft.shim
+    val (model, _, test) = fitted
+    val request = localRequest(test)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    shim.drainListenerBus(spark) // earlier jobs' events reach no listener
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val served = Serve.predictOne(spark, model, request, train = null)
+        .collect()
+      assert(served.length == 1)
+      shim.drainListenerBus(spark)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.get == 0, s"${jobs.get} jobs for one served row")
+  }
+
+  test("the fitted density stage equals the withDensities join: every " +
+      "test row, unseen and null keys, and double keys -0.0/0.0 and NaN") {
+    import spark.implicits._
+    val (model, train, test) = fitted
+    val stage = model.stages.collectFirst { case d: DensityModel => d }.get
+    // test rows plus an unseen and a null supplier/part key
+    val targets = test.drop("supp_density", "part_density")
+      .unionByName(test.limit(1).drop("supp_density", "part_density")
+        .withColumn("l_suppkey", lit(-1L)).withColumn("l_partkey", lit(-1L)))
+      .unionByName(test.limit(1).drop("supp_density", "part_density")
+        .withColumn("l_suppkey", lit(null).cast("long"))
+        .withColumn("l_partkey", lit(null).cast("long")))
+    val cols = Seq("l_orderkey", "l_linenumber", "l_suppkey", "l_partkey",
+      "supp_density", "part_density").map(col)
+    val viaStage = stage.transform(targets).select(cols: _*)
+    val viaJoin = CrimePipeline.withDensities(targets, train)
+      .select(cols: _*)
+    assert(viaStage.schema.map(_.dataType) == viaJoin.schema.map(_.dataType))
+    assert(viaStage.count() == test.count() + 2)
+    assert(viaStage.exceptAll(viaJoin).isEmpty &&
+      viaJoin.exceptAll(viaStage).isEmpty)
+
+    // double keys compare with the join's equality: -0.0 = 0.0, NaN = NaN
+    val stats = Seq[Option[Double]](Some(0.0), Some(0.0), Some(-0.0),
+      Some(Double.NaN), Some(Double.NaN), Some(1.5), None).toDF("k")
+    val target = Seq[(Int, Option[Double])](0 -> Some(-0.0), 1 -> Some(0.0),
+      2 -> Some(Double.NaN), 3 -> Some(1.5), 4 -> Some(2.5), 5 -> None)
+      .toDF("id", "k")
+    val byStage = DensityModel.fit(stats, Seq("k" -> "n")).transform(target)
+    val byJoin = graft.engine.Density.attachCount(target, stats, "k", "n")
+    def counts(df: DataFrame): Map[Int, Long] =
+      df.select("id", "n").collect().map(r => r.getInt(0) -> r.getLong(1))
+        .toMap
+    assert(byStage.schema("n").dataType == byJoin.schema("n").dataType)
+    assert(counts(byJoin) == Map(0 -> 3L, 1 -> 3L, 2 -> 2L, 3 -> 1L, 4 -> 0L,
+      5 -> 0L))
+    assert(counts(byStage) == counts(byJoin))
   }
 }
