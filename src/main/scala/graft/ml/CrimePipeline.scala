@@ -2,9 +2,11 @@ package graft.ml
 
 import org.apache.spark.ml.{Pipeline, PipelineModel, PipelineStage}
 import org.apache.spark.ml.classification.RandomForestClassifier
-import org.apache.spark.ml.feature.{StringIndexer, VectorAssembler}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.ml.feature.{StringIndexer, StringIndexerModel, VectorAssembler}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
+import org.apache.spark.unsafe.types.UTF8String
 import graft.engine._
 
 /** The reference's ML pipeline (SURVEY.md §2.11, `XGBoost.py`) re-homed
@@ -107,20 +109,13 @@ object CrimePipeline {
       Density.attachCount(df, train.select(key), key, out)
     }
 
-  /** Per-class training row counts: ONE collect of a ≤|classes|-row
-    * table. */
-  private def classCounts(train: DataFrame, labelCol: String)
-      : Seq[(Any, Long)] =
-    train.groupBy(labelCol).agg(count(lit(1))).collect()
-      .map(r => r.get(0) -> r.getLong(1)).toSeq
-
   /** Inverse-frequency class-weight table clipped to [0.1, 5.0]
     * (`XGBoost.py:247-257`): n_classes (label, weight) pairs, computed ONCE
     * per training run on the driver from one collect of the class counts,
     * so no consumer re-aggregates `train`. */
   def classWeightTable(train: DataFrame, labelCol: String)
       : Seq[(Any, Double)] =
-    weightsOf(classCounts(train, labelCol))
+    weightsOf(DensityModel.countValues(train, Seq(col(labelCol))).head)
 
   private def weightsOf(counts: Seq[(Any, Long)]): Seq[(Any, Double)] = {
     val total = counts.map(_._2).sum.toDouble
@@ -143,39 +138,89 @@ object CrimePipeline {
   def withClassWeights(df: DataFrame, train: DataFrame): DataFrame =
     attachWeights(df, classWeightTable(train, LabelCol), LabelCol)
 
-  /** The stages every pipeline here shares: the category StringIndexer
-    * (freq-ordered, handleInvalid=keep, M1 — unseen serve-time values
-    * get the extra index), then the label StringIndexer (M2) and the
-    * VectorAssembler (M9). */
-  private def featureStages(r: Recipe)
-      : (StringIndexer, Array[PipelineStage]) = {
-    val indexer = new StringIndexer()
-      .setInputCol(r.indexIn).setOutputCol(r.indexOut)
-      .setStringOrderType("frequencyDesc").setHandleInvalid("keep")
-    val labelIndexer = new StringIndexer()
-      .setInputCol(r.label).setOutputCol("label")
-      .setStringOrderType("frequencyDesc").setHandleInvalid("error")
-    val assembler = new VectorAssembler()
+  /** The boosted variant's feature stages as estimators: the category
+    * StringIndexer (freq-ordered, handleInvalid=keep, M1 — unseen
+    * serve-time values get the extra index), then the label StringIndexer
+    * (M2) and the VectorAssembler (M9). The forest recipes build the same
+    * indexers from their fused counts ([[trainStats]]). */
+  private def featureStages(r: Recipe): Array[PipelineStage] =
+    Array(
+      new StringIndexer()
+        .setInputCol(r.indexIn).setOutputCol(r.indexOut)
+        .setStringOrderType("frequencyDesc").setHandleInvalid("keep"),
+      new StringIndexer()
+        .setInputCol(r.label).setOutputCol("label")
+        .setStringOrderType("frequencyDesc").setHandleInvalid("error"),
+      assembler(r))
+
+  private def assembler(r: Recipe): VectorAssembler =
+    new VectorAssembler()
       .setInputCols(r.featureCols.toArray).setOutputCol("features")
-    (indexer, Array(labelIndexer, assembler))
+
+  /** Everything the pipeline fits before the forest: the class counts
+    * (weights and training size), the density stage, and the category
+    * and label indexers. */
+  private[ml] final case class TrainStats(classCounts: Seq[(Any, Long)],
+      densities: DensityModel, indexer: StringIndexerModel,
+      labelIndexer: StringIndexerModel)
+
+  /** [[TrainStats]] from ONE grouping-sets aggregation over `train`
+    * ([[DensityModel.countValues]]): a set for the label, the category
+    * column `indexIn` and each density key, collected once. The indexers
+    * (`indexIn` → `indexOut`, label → "label") are built on the driver
+    * exactly as `StringIndexer(frequencyDesc).fit` builds them: input
+    * cast to string, nulls dropped, count descending, ties by string
+    * ascending. */
+  private[ml] def trainStats(train: DataFrame, label: String,
+      indexIn: String, indexOut: String,
+      densities: Seq[(String, String)]): TrainStats = {
+    def asString(c: String): Column =
+      if (train.schema(c).dataType == StringType) col(c)
+      else col(c).cast(StringType)
+    // the weights count raw labels; a non-string label is counted again
+    // as the string its indexer sees
+    val labelCast =
+      if (train.schema(label).dataType == StringType) None
+      else Some(asString(label))
+    val counts = DensityModel.countValues(train,
+      Seq(col(label), asString(indexIn)) ++
+        DensityModel.keyColumns(train, densities) ++ labelCast)
+    val (keyCounts, labelCastCounts) =
+      counts.drop(2).splitAt(densities.length)
+    def indexer(valueCounts: Seq[(Any, Long)], in: String, out: String,
+        handleInvalid: String): StringIndexerModel =
+      new StringIndexerModel(Array(frequencyDesc(valueCounts)))
+        .setInputCol(in).setOutputCol(out).setHandleInvalid(handleInvalid)
+    TrainStats(counts.head,
+      DensityModel.fromCounts(train.schema, densities, keyCounts),
+      indexer(counts(1), indexIn, indexOut, "keep"),
+      indexer(labelCastCounts.headOption.getOrElse(counts.head), label,
+        "label", "error"))
   }
 
+  /** `StringIndexer`'s frequencyDesc label order: null dropped, count
+    * descending, ties by string ascending in Spark's UTF-8 byte order. */
+  private def frequencyDesc(counts: Seq[(Any, Long)]): Array[String] =
+    counts.collect { case (v: String, n) => (v, n) }
+      .sortWith { case ((a, m), (b, n)) =>
+        if (m != n) m > n
+        else UTF8String.fromString(a).compareTo(UTF8String.fromString(b)) < 0
+      }.map(_._1).toArray
+
   /** Fit the weighted RandomForest (M5 stand-in) behind the fitted
-    * density stage and the shared stages. `maxBins` is sized from the
-    * FITTED category indexer: a categorical feature needs maxBins ≥ its
-    * value count (its labels plus the keep bucket), so a
-    * real-cardinality column (161 `Location Description` values) trains,
-    * while an indexer with ≤ 31 labels keeps the default 32 and its model
-    * is unchanged. A forest also caps its bins at the training row
-    * count, so when the value count exceeds `nTrain` the index is fitted
-    * as an ordered numeric feature instead. The fitted indexer enters the
-    * pipeline as a transformer, so it is fitted once. */
-  private def fitForest(r: Recipe, densities: DensityModel,
-      train: DataFrame, nTrain: Long): PipelineModel = {
-    val (indexer, rest) = featureStages(r)
-    val indexerModel = indexer.fit(train)
-    val values = indexerModel.labelsArray.head.length + 1
-    val categorical = values <= nTrain
+    * density stage, indexers and assembler; the forest is the pipeline's
+    * only estimator. `maxBins` is sized from the category indexer: a
+    * categorical feature needs maxBins ≥ its value count (its labels plus
+    * the keep bucket), so a real-cardinality column (161 `Location
+    * Description` values) trains, while an indexer with ≤ 31 labels keeps
+    * the default 32 and its model is unchanged. A forest also caps its
+    * bins at the training row count, so when the value count exceeds
+    * `nTrain` the index is fitted as an ordered numeric feature
+    * instead. */
+  private def fitForest(r: Recipe, stats: TrainStats, train: DataFrame)
+      : PipelineModel = {
+    val values = stats.indexer.labelsArray.head.length + 1
+    val categorical = values <= stats.classCounts.map(_._2).sum
     val ordered =
       if (categorical) Nil
       else Seq(new OrderedFeatures().setInputCols(Array(r.indexOut)))
@@ -185,31 +230,33 @@ object CrimePipeline {
       .setNumTrees(r.numTrees).setMaxDepth(7).setSeed(42L)
       .setMaxBins(if (categorical) math.max(32, values) else 32)
     new Pipeline()
-      .setStages(Array(densities, indexerModel) ++ ordered ++ rest :+ rf)
+      .setStages(Array(stats.densities, stats.indexer) ++ ordered ++
+        Array(stats.labelIndexer, assembler(r), rf))
       .fit(train)
   }
 
-  /** Train-only densities and weights on both splits — the density stage
-    * and the class counts are fitted ONCE, from one collect each — then
+  /** Train-only densities and weights on both splits — every statistic
+    * before the forest comes from one aggregation ([[trainStats]]) — then
     * the forest fit; the density stage leads the fitted pipeline, so a
     * raw row is served by `model.transform`. Returns (model, train,
     * test). */
   private def fitSplit(r: Recipe, trainRaw: DataFrame, testRaw: DataFrame)
       : (PipelineModel, DataFrame, DataFrame) = {
-    val counts = classCounts(trainRaw, r.label)
-    val weights = weightsOf(counts)
-    val densities = DensityModel.fit(trainRaw, r.densities)
+    val stats =
+      trainStats(trainRaw, r.label, r.indexIn, r.indexOut, r.densities)
+    val weights = weightsOf(stats.classCounts)
     def prep(df: DataFrame): DataFrame = {
       // a null key filled to 0 below counts as key 0 when the pipeline
       // re-applies the stage; no District, Beat or Community Area is 0
-      val out = attachWeights(densities.transform(df), weights, r.label)
+      val out = attachWeights(stats.densities.transform(df), weights,
+        r.label)
       if (r.fillNulls)
         out.na.fill(0.0, r.featureCols.filterNot(_ == r.indexOut))
       else out
     }
     val train = prep(trainRaw)
     val test = prep(testRaw)
-    (fitForest(r, densities, train, counts.map(_._2).sum), train, test)
+    (fitForest(r, stats, train), train, test)
   }
 
   /** Boosted-trees variant (M5's gradient-boosting parity path,
@@ -225,7 +272,6 @@ object CrimePipeline {
       validationIndicatorCol: Option[String] = None,
       validationTol: Double = 0.01): Pipeline = {
     import org.apache.spark.ml.classification.{GBTClassifier, OneVsRest}
-    val (brandIndexer, rest) = featureStages(Lineitem)
     val gbt = new GBTClassifier()
       .setLabelCol("label").setFeaturesCol("features")
       .setWeightCol("weight")
@@ -237,7 +283,7 @@ object CrimePipeline {
     val ovr = new OneVsRest().setClassifier(gbt)
       .setLabelCol("label").setFeaturesCol("features")
       .setWeightCol("weight")
-    new Pipeline().setStages((brandIndexer +: rest) :+ ovr)
+    new Pipeline().setStages(featureStages(Lineitem) :+ ovr)
   }
 
   /** GLOBAL early stopping for the boosted variant (M10,

@@ -1,31 +1,33 @@
 package graft.ml
 
-import graft.engine.Density
 import org.apache.spark.ml.Transformer
 import org.apache.spark.ml.graft.shim
 import org.apache.spark.ml.param.{ParamMap, StringArrayParam}
 import org.apache.spark.ml.util.{Identifiable, MLReadable, MLReader, MLWritable, MLWriter}
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
 import org.apache.spark.sql.api.java.UDF1
-import org.apache.spark.sql.functions.{col, udf}
+import org.apache.spark.sql.functions.{col, count, grouping, lit, udf}
 import org.apache.spark.sql.types._
+import scala.collection.immutable.ListMap
 import scala.jdk.CollectionConverters._
 
 /** The train-only count encodings (SURVEY.md §2.4 J1, `XGBoost.py:168-187`)
   * as a fitted pipeline stage: one key → count table per density column,
   * collected once at fit time (|distinct(key)| entries each — the same
-  * driver-memory bound [[Density.attachCount]]'s broadcast join assumes).
+  * driver-memory bound [[graft.engine.Density.attachCount]]'s broadcast
+  * join assumes).
   *
   * `transform` is a projection that attaches each density with an O(1)
   * hashed lookup — no join and no scan of the statistics frame — so
   * serving one row costs the same at any training size, and a one-row
   * local request folds into a local relation and runs no Spark job.
-  * Each density column is written with `withColumn` semantics: a column
-  * of the same name is replaced.
+  * Every density is attached in one `withColumns` projection, so the
+  * analyzer runs once per transform, not once per key; a column of the
+  * same name is replaced.
   *
-  * Values equal the join-based [[Density.attachCount]]'s: `bigint`
-  * counts, 0 for unseen and null keys, and join equality for floating
-  * keys (−0.0 = 0.0, NaN = NaN). */
+  * Values equal the join-based [[graft.engine.Density.attachCount]]'s:
+  * `bigint` counts, 0 for unseen and null keys, and join equality for
+  * floating keys (−0.0 = 0.0, NaN = NaN). */
 final class DensityModel private (override val uid: String,
     private val tables: Array[DensityModel.Counts])
     extends Transformer with MLWritable {
@@ -41,10 +43,10 @@ final class DensityModel private (override val uid: String,
 
   override def transform(dataset: Dataset[_]): DataFrame = {
     transformSchema(dataset.schema, logging = true)
-    $(inputCols).indices.foldLeft(dataset.toDF()) { (df, i) =>
-      df.withColumn($(outputCols)(i),
-        udf(tables(i), LongType).asNonNullable()(col($(inputCols)(i))))
-    }
+    dataset.toDF().withColumns(ListMap($(inputCols).indices.map { i =>
+      $(outputCols)(i) ->
+        udf(tables(i), LongType).asNonNullable()(col($(inputCols)(i)))
+    }: _*))
   }
 
   override def transformSchema(schema: StructType): StructType = {
@@ -65,15 +67,46 @@ final class DensityModel private (override val uid: String,
 
 object DensityModel extends MLReadable[DensityModel] {
 
-  /** Count each key (input column → density column) over the statistics
-    * frame: one aggregation and collect per key. */
-  def fit(stats: DataFrame, keys: Seq[(String, String)]): DensityModel = {
-    val tables = keys.map { case (key, out) =>
-      checkKey(stats.schema, key)
-      collectCounts(Density.countTable(stats, key, out))
+  /** Count every key (input column → density column) over the statistics
+    * frame in one aggregation ([[countValues]]). */
+  def fit(stats: DataFrame, keys: Seq[(String, String)]): DensityModel =
+    fromCounts(stats.schema, keys, countValues(stats, keyColumns(stats, keys)))
+
+  /** The key columns to count for `keys`, each checked to be a supported
+    * key type. */
+  private[ml] def keyColumns(stats: DataFrame,
+      keys: Seq[(String, String)]): Seq[Column] =
+    keys.map { case (key, _) => checkKey(stats.schema, key); col(key) }
+
+  /** The density stage from one (value, count) list per key, as
+    * [[countValues]] returns them for [[keyColumns]]. */
+  private[ml] def fromCounts(schema: StructType, keys: Seq[(String, String)],
+      counts: Seq[Seq[(Any, Long)]]): DensityModel = {
+    val tables = keys.zip(counts).map { case ((key, _), c) =>
+      new Counts(schema(key).dataType, c.toArray)
     }
     new DensityModel(Identifiable.randomUID("density"), tables.toArray)
       .setKeys(keys)
+  }
+
+  /** Count the values of every column in `cols` over `df` in ONE
+    * aggregation: grouping sets, one per column, collected once
+    * (Σ |distinct(column)| rows). A row's set is told apart by
+    * `grouping`, not by a null test, so a null value of a nullable column
+    * is its own key. Returns each column's (value, count) pairs, in
+    * `cols` order; a null value, when present, is one of the pairs. */
+  private[ml] def countValues(df: DataFrame, cols: Seq[Column])
+      : Seq[Seq[(Any, Long)]] = {
+    val keys = cols.indices.map(i => s"_k$i")
+    val n = keys.length
+    val rows = df.select(cols.zip(keys).map { case (c, k) => c.as(k) }: _*)
+      .groupingSets(keys.map(k => Seq(col(k))), keys.map(col): _*)
+      .agg(count(lit(1)), keys.map(k => grouping(col(k))): _*)
+      .collect()
+    keys.indices.map { i =>
+      rows.filter(_.getByte(n + 1 + i) == 0)
+        .map(r => r.get(i) -> r.getLong(n)).toSeq
+    }
   }
 
   /** Keys whose external values compare with `equals` exactly as Spark's

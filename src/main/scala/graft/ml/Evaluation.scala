@@ -4,17 +4,19 @@ import org.apache.spark.ml.PipelineModel
 import org.apache.spark.ml.classification.RandomForestClassificationModel
 import org.apache.spark.ml.evaluation.MulticlassClassificationEvaluator
 import org.apache.spark.ml.feature.StringIndexerModel
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import scala.jdk.CollectionConverters._
 
 /** Evaluation surface (SURVEY.md §2.11 M7/M8): accuracy, weighted F1,
   * per-class precision/recall/F1 from a distributed confusion matrix,
   * gain-style feature importances.
   *
-  * The per-class report is a plain DataFrame aggregation over
-  * (label, prediction) — no sklearn-style driver collection of predictions
-  * (`XGBoost.py:303-309` re-homed): the confusion matrix is
-  * |classes|² rows regardless of data scale. */
+  * The per-class report aggregates (label, prediction) on the executors
+  * — no sklearn-style driver collection of predictions
+  * (`XGBoost.py:303-309` re-homed): only the confusion matrix, |classes|²
+  * rows regardless of data scale, reaches the driver. */
 object Evaluation {
 
   def accuracy(predictions: DataFrame): Double =
@@ -27,36 +29,40 @@ object Evaluation {
       .setLabelCol("label").setPredictionCol("prediction")
       .setMetricName("weightedFMeasure").evaluate(predictions)
 
-  /** Per-class precision/recall/F1/support from one confusion-matrix
-    * aggregation (distributed; final math over |classes|² rows). */
+  /** Per-class precision/recall/F1/support from ONE confusion-matrix
+    * collect (≤ |classes|² rows); the final math runs on the driver and
+    * the report is a local frame: label (ascending), support, pred_n, tp,
+    * precision, recall, f1. A class that is predicted but never a true
+    * label still gets a row (precision 0 over its false positives) —
+    * sklearn classification_report semantics. Label and prediction are
+    * non-null, as MLlib's evaluators require. */
   def perClassReport(predictions: DataFrame): DataFrame = {
-    val cm = predictions.groupBy("label", "prediction")
-      .agg(count(lit(1)).as("n")).cache()
-    val support = cm.groupBy("label").agg(sum("n").as("support"))
-    val predTotals = cm.groupBy("prediction").agg(sum("n").as("pred_n"))
-    val tp = cm.filter(col("label") === col("prediction"))
-      .select(col("label"), col("n").as("tp"))
-    // full outer: a class that is predicted but never a true label must
-    // still get a row (precision 0 over its false positives) — sklearn
-    // classification_report semantics
-    val report = support
-      .join(predTotals.withColumnRenamed("prediction", "label"),
-        Seq("label"), "full_outer")
-      .na.fill(0, Seq("support", "pred_n"))
-      .join(tp, Seq("label"), "left").na.fill(0, Seq("tp"))
-      .withColumn("precision",
-        when(col("pred_n") > 0, col("tp") / col("pred_n")).otherwise(0.0))
-      .withColumn("recall",
-        when(col("support") > 0, col("tp") / col("support")).otherwise(0.0))
-      .withColumn("f1",
-        when(col("precision") + col("recall") > 0,
-          lit(2.0) * col("precision") * col("recall") /
-            (col("precision") + col("recall"))).otherwise(0.0))
-      .orderBy("label")
-      .localCheckpoint(true)
-    cm.unpersist()
-    report
+    val cm = predictions.groupBy("label", "prediction").count().collect()
+      .map(r => (r.getDouble(0), r.getDouble(1)) -> r.getLong(2)).toMap
+    def total(of: ((Double, Double)) => Double, c: Double): Long =
+      cm.collect { case (k, n) if of(k) == c => n }.sum
+    val classes = cm.keys.flatMap { case (l, p) => Seq(l, p) }.toSeq
+      .distinct.sorted(Ordering.Double.TotalOrdering)
+    val rows = classes.map { c =>
+      val support = total(_._1, c)
+      val predN = total(_._2, c)
+      val tp = cm.getOrElse((c, c), 0L)
+      val precision = if (predN > 0) tp.toDouble / predN else 0.0
+      val recall = if (support > 0) tp.toDouble / support else 0.0
+      val f1 =
+        if (precision + recall > 0)
+          2.0 * precision * recall / (precision + recall)
+        else 0.0
+      Row(c, support, predN, tp, precision, recall, f1)
+    }
+    predictions.sparkSession.createDataFrame(rows.asJava, ReportSchema)
   }
+
+  private val ReportSchema = StructType(
+    (Seq("label" -> DoubleType) ++
+      Seq("support", "pred_n", "tp").map(_ -> LongType) ++
+      Seq("precision", "recall", "f1").map(_ -> DoubleType))
+      .map { case (name, t) => StructField(name, t, nullable = false) })
 
   /** Feature importances zipped with names (M8, `XGBoost.py:314-320`).
     * For the OneVsRest boosted variant, importances are averaged over the

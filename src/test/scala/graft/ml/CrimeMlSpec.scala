@@ -4,6 +4,7 @@ import graft.SparkSpec
 import graft.engine.{CrimeEtl, CrimeFixture}
 import org.apache.spark.ml.PipelineModel
 import org.apache.spark.ml.linalg.Vector
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The reference's entry point 2 (`python xgboost_model.py`, SURVEY.md
@@ -13,6 +14,14 @@ class CrimeMlSpec extends SparkSpec {
 
   private lazy val prepared = CrimeEtl.prepare(CrimeFixture.raw(spark))
   private lazy val fitted = CrimePipeline.fitCrime(prepared, cutoffYear = 2003)
+
+  /** The fused statistics of a `fitCrime` model against the estimator
+    * stages on the same train frame. */
+  private def checkEstimatorParity(input: DataFrame, model: PipelineModel,
+      train: DataFrame, test: DataFrame): Unit =
+    EstimatorParity.check(model,
+      graft.engine.Sampling.timeSplit(input, col("ts"), 2003)._1,
+      train, test, "Crime_Category", Seq("ID", "Location Description"))
 
   test("null Beats survive cleaning and are fill-0'd before assembly " +
     "(XGBoost.py:232-233 residual fillna)") {
@@ -83,6 +92,7 @@ class CrimeMlSpec extends SparkSpec {
         .drop("r")
       val (model, train, test) =
         CrimePipeline.fitCrime(wide, cutoffYear = 2003)
+      checkEstimatorParity(wide, model, train, test)
       val nLoc = Evaluation.indexer(model, "Location_Index")
         .labelsArray.head.length
       assert(nLoc >= 161)
@@ -105,5 +115,11 @@ class CrimeMlSpec extends SparkSpec {
           .map(_.getDouble(0)).toSeq.sorted
       assert(predictions(PipelineModel.load(dir)) == predictions(model))
     }
+  }
+
+  test("the fused train statistics build the same model as the estimator " +
+    "stages: indexer labels, density tables, class weights, predictions") {
+    val (model, train, test) = fitted
+    checkEstimatorParity(prepared, model, train, test)
   }
 }

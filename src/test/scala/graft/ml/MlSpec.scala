@@ -4,6 +4,7 @@ import graft.SparkSpec
 import org.apache.spark.ml.PipelineModel
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import CrimePipeline.LabelCol
 
 /** Golden ML invariants (SURVEY.md §5.2): stochastic model ⇒ no exact
   * goldens; pinned seed + floors + structural invariants instead. */
@@ -22,6 +23,33 @@ class MlSpec extends SparkSpec {
   private def localRequest(test: DataFrame): DataFrame = {
     val raw = test.select(rawCols.map(col): _*)
     spark.createDataFrame(java.util.List.of(raw.head()), raw.schema)
+  }
+
+  /** Runs `f` with a listener attached: the jobs it starts, and the
+    * physical plan of each SQL execution it starts. */
+  private def observe(f: => Unit): (Int, Seq[String]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+      SparkListenerJobStart}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    import org.apache.spark.sql.graft.shim
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          plans.add(s.physicalPlanDescription)
+        case _ =>
+      }
+    }
+    shim.drainListenerBus(spark) // earlier jobs' events reach no listener
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      f
+      shim.drainListenerBus(spark)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    (jobs.get, plans.toArray(Array.empty[String]).toSeq)
   }
 
   private def servedPrediction(model: PipelineModel, request: DataFrame,
@@ -207,24 +235,114 @@ class MlSpec extends SparkSpec {
 
   test("single-row serving runs no Spark job: a one-row local request " +
       "folds through the fitted stages without touching training data") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    import org.apache.spark.sql.graft.shim
     val (model, _, test) = fitted
     val request = localRequest(test)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    shim.drainListenerBus(spark) // earlier jobs' events reach no listener
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val (jobs, _) = observe {
       val served = Serve.predictOne(spark, model, request, train = null)
         .collect()
       assert(served.length == 1)
-      shim.drainListenerBus(spark)
-    } finally spark.sparkContext.removeSparkListener(listener)
-    assert(jobs.get == 0, s"${jobs.get} jobs for one served row")
+    }
+    assert(jobs == 0, s"$jobs jobs for one served row")
+  }
+
+  test("the per-class report runs one confusion-matrix aggregation: at " +
+      "most 3 jobs on an uncached transform, and every statistic before " +
+      "the forest comes from one aggregation") {
+    val (model, _, test) = fitted
+    val (reportJobs, _) = observe {
+      Evaluation.perClassReport(model.transform(test)).collect()
+    }
+    assert(reportJobs <= 3, s"$reportJobs jobs for the per-class report")
+    val (_, plans) = observe(CrimePipeline.fit(spark, sf0001, 1997))
+    val aggregations = plans.count(_.contains("Aggregate"))
+    assert(aggregations == 1, s"$aggregations aggregations in one fit")
+  }
+
+  test("the fused train statistics build the same model as the estimator " +
+      "stages: indexer labels, density tables, class weights, predictions") {
+    val (model, train, test) = fitted
+    val trainRaw =
+      CrimePipeline.split(CrimePipeline.base(spark, sf0001), 1997)._1
+    EstimatorParity.check(model, trainRaw, train, test, LabelCol,
+      Seq("l_orderkey", "l_linenumber"))
+  }
+
+  test("fused statistics on a hand-built frame: frequency ties order by " +
+      "string, a non-string column indexes by its string cast, and a null " +
+      "in any counted column gets neither an index nor a count") {
+    import org.apache.spark.ml.feature.StringIndexer
+    import spark.implicits._
+    // s: tie b/c (2 each) behind a (3); i: tie "10"/"9" (2 each), which
+    // orders "10" first as a string; k and d: nullable density keys
+    val df = Seq[(Option[String], Option[Int], Option[Long], Option[Double])](
+      (Some("a"), Some(10), Some(1L), Some(0.5)),
+      (Some("a"), Some(10), Some(1L), Some(0.5)),
+      (Some("a"), Some(9), Some(2L), None),
+      (Some("b"), Some(9), None, Some(-0.0)),
+      (Some("b"), None, None, Some(0.0)),
+      (Some("c"), Some(7), Some(2L), Some(1.5)),
+      (Some("c"), Some(7), Some(3L), None),
+      (None, Some(7), None, Some(0.5))).toDF("s", "i", "k", "d")
+    val keys = Seq("k" -> "k_n", "d" -> "d_n")
+    def indexed(c: String): Seq[String] = new StringIndexer()
+      .setInputCol(c).setStringOrderType("frequencyDesc").fit(df)
+      .labelsArray.head.toSeq
+    assert(indexed("s") == Seq("a", "b", "c"))
+    assert(indexed("i") == Seq("7", "10", "9"))
+    for ((label, in) <- Seq("s" -> "i", "i" -> "s")) {
+      val stats = CrimePipeline.trainStats(df, label, in, "idx", keys)
+      assert(stats.indexer.labelsArray.head.toSeq == indexed(in))
+      assert(stats.labelIndexer.labelsArray.head.toSeq == indexed(label))
+      assert(stats.classCounts.toMap ==
+        df.groupBy(label).count().collect().map(r => r.get(0) -> r.getLong(1))
+          .toMap)
+      val target = df.withColumn("id", monotonically_increasing_id())
+      val viaStage = stats.densities.transform(target)
+      val viaJoin = keys.foldLeft(target) { case (t, (key, out)) =>
+        graft.engine.Density.attachCount(t, df, key, out)
+      }
+      val cols = Seq("id", "k_n", "d_n").map(col)
+      val (a, b) = (viaStage.select(cols: _*), viaJoin.select(cols: _*))
+      assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
+      // null keys count 0: the null group never enters a table
+      assert(viaStage.filter(col("k").isNull && col("k_n") =!= 0).isEmpty)
+      assert(viaStage.filter(col("d").isNull && col("d_n") =!= 0).isEmpty)
+    }
+  }
+
+  test("the per-class report equals MulticlassMetrics per label, with a " +
+      "class predicted but never true and one true but never predicted") {
+    import org.apache.spark.mllib.evaluation.MulticlassMetrics
+    import org.apache.spark.sql.types._
+    import spark.implicits._
+    // class 3 is predicted, never true; class 2 is true, never predicted
+    val preds = Seq(0.0 -> 0.0, 0.0 -> 0.0, 0.0 -> 0.0, 0.0 -> 1.0,
+      1.0 -> 1.0, 1.0 -> 1.0, 1.0 -> 3.0, 2.0 -> 0.0, 2.0 -> 1.0)
+      .toDF("label", "prediction")
+    val report = Evaluation.perClassReport(preds)
+    assert(report.schema.map(f => f.name -> f.dataType) == Seq(
+      "label" -> DoubleType, "support" -> LongType, "pred_n" -> LongType,
+      "tp" -> LongType, "precision" -> DoubleType, "recall" -> DoubleType,
+      "f1" -> DoubleType))
+    val rows = report.collect()
+    assert(rows.map(_.getDouble(0)).toSeq == Seq(0.0, 1.0, 2.0, 3.0))
+    val metrics = new MulticlassMetrics(
+      preds.select("prediction", "label").as[(Double, Double)].rdd)
+    val support = preds.groupBy("label").count().collect()
+      .map(r => r.getDouble(0) -> r.getLong(1)).toMap
+    for (r <- rows) {
+      val l = r.getDouble(0)
+      assert(r.getAs[Long]("support") == support.getOrElse(l, 0L), s"$l")
+      assert(r.getAs[Long]("pred_n") == preds.filter(col("prediction") === l)
+        .count(), s"$l")
+      val scores = Seq("precision", "recall", "f1").map(r.getAs[Double])
+      if (support.contains(l))
+        assert(scores == Seq(metrics.precision(l), metrics.recall(l),
+          metrics.fMeasure(l)), s"$l")
+      else // MulticlassMetrics knows only true labels; 0 of 1 is right
+        assert(scores == Seq(0.0, 0.0, 0.0), s"$l")
+    }
+    assert(rows.map(_.getAs[Long]("tp")).toSeq == Seq(3L, 2L, 0L, 0L))
   }
 
   test("the fitted density stage equals the withDensities join: every " +
