@@ -16,13 +16,6 @@ import org.apache.spark.sql.functions._
   * [[retractShingleIndex]]. The `localCheckpoint` calls are
   * compute-once memos for frames consumed several times; correctness
   * never depends on them.
-  *
-  * The one persisted form left is id-keyed state on [[StateStore]]
-  * (`*IdKeyedStatePartitioned`): batch-wins upsert and takedown
-  * retraction over hash-partitioned parquet, each cycle committed with
-  * one atomic manifest swap. No registered query or ML path calls it;
-  * it stays only because the StateStore specs exercise the store
-  * through it, and goes when that store is retired.
   */
 private[graft] trait DedupMaintenance { this: Dedup.type =>
 
@@ -371,79 +364,5 @@ private[graft] trait DedupMaintenance { this: Dedup.type =>
     // this straight into the report join, which destroys row order;
     // q246 (the query surface) keeps the ordered default.
     if (ordered) out.orderBy(idCol) else out
-  }
-
-  /** Write any ID-KEYED state table as partitioned StateStore state
-    * (`pbucket = pmod(hash(id), numBuckets)`) — the generic layout for
-    * the embedding exploded-row index
-    * ([[graft.ext.SimSearch.corpusEmbeddingLshIndex]], id = vec_id,
-    * several rows per id) and the fingerprint table
-    * ([[corpusFingerprintIndex]]'s (pid, fp) half, id = pid). Both
-    * maintain by id-keyed anti-join (+ union), so — unlike the cluster
-    * table — rows NEVER change buckets: an id's fresh rows hash
-    * exactly where its stale rows lived, which makes the pruning
-    * trivial and the upsert direction incapable of emptying a bucket.
-    * Schema-generic: every non-id column passes through untouched. */
-  def writeIdKeyedStatePartitioned(state: DataFrame, path: String,
-      idCol: String, numBuckets: Int): Unit =
-    StateStore.create(state.sparkSession, path,
-      state.withColumn("pbucket",
-        pmod(hash(col(idCol)), lit(numBuckets))),
-      numBuckets)
-
-  /** Batch-wins UPSERT against [[writeIdKeyedStatePartitioned]] state:
-    * prune the state read to the batch ids' buckets, anti-join the
-    * batch ids' stale rows out, union the fresh rows (same buckets by
-    * construction), commit through the atomic manifest swap — the
-    * [[graft.ext.SimSearch.upsertEmbeddingIndex]] semantics with every
-    * cycle's I/O bounded to delta-touched buckets. A re-delivered
-    * identical batch supersedes the same buckets with identical
-    * contents (idempotent). Returns the touched bucket ids. */
-  def upsertIdKeyedStatePartitioned(statePath: String,
-      freshRows: DataFrame, idCol: String, numBuckets: Int): Seq[Int] = {
-    val spark = freshRows.sparkSession
-    StateStore.requireNumBuckets(spark, statePath, numBuckets)
-    val fresh = freshRows
-      .withColumn("pbucket", pmod(hash(col(idCol)), lit(numBuckets)))
-      .localCheckpoint(eager = true) // memo: touched AND merge
-    val touched = fresh.select("pbucket").distinct()
-      .collect().map(_.getInt(0)).sorted.toSeq
-    val merged = StateStore.readBuckets(spark, statePath, touched)
-      .join(fresh.select(col(idCol)).dropDuplicates(idCol), Seq(idCol),
-        "left_anti")
-      .unionByName(fresh)
-    StateStore.commit(spark, statePath, merged, touched)
-    touched
-  }
-
-  /** Takedown RETRACTION against [[writeIdKeyedStatePartitioned]]
-    * state: prune to the deleted ids' buckets, ONE id-keyed anti-join
-    * on the pruned side, commit through the atomic manifest swap
-    * (fully-emptied buckets leave the manifest in the same swap), then
-    * audit that no deleted id's row is readable at the new snapshot.
-    * [[graft.ext.SimSearch.retractEmbeddingIndex]] semantics with the
-    * cycle's I/O bounded to delta-touched buckets; a re-delivered
-    * takedown is a no-op that passes the same audit. Returns the
-    * touched bucket ids. */
-  def retractIdKeyedStatePartitioned(statePath: String,
-      deletedIds: DataFrame, idCol: String, numBuckets: Int): Seq[Int] = {
-    val spark = deletedIds.sparkSession
-    StateStore.requireNumBuckets(spark, statePath, numBuckets)
-    val del = deletedIds.select(col(idCol)).dropDuplicates(idCol)
-      .withColumn("pbucket", pmod(hash(col(idCol)), lit(numBuckets)))
-      .localCheckpoint(eager = true) // memo: touched, merge, audit
-    val touched = del.select("pbucket").distinct()
-      .collect().map(_.getInt(0)).sorted.toSeq
-    val merged = StateStore.readBuckets(spark, statePath, touched)
-      .join(del.select(col(idCol)), Seq(idCol), "left_anti")
-    StateStore.commit(spark, statePath, merged, touched)
-    val stale = StateStore.readBuckets(spark, statePath, touched)
-      .join(del.select(col(idCol)), Seq(idCol), "left_semi")
-      .count()
-    require(stale == 0,
-      s"id-keyed takedown audit failed: $stale deleted ids' rows " +
-        s"still readable under $statePath (logic bug; the commit " +
-        "protocol cannot produce this)")
-    touched
   }
 }

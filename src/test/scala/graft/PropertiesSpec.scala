@@ -457,84 +457,6 @@ class PropertiesSpec extends SparkSpec {
     assert(SCTest.check(params, prop).passed)
   }
 
-  test("StateStore MODEL PROPERTY: arbitrary upsert/retract/compact " +
-    "sequences with random crash injection read back equal to a plain " +
-    "in-memory map at EVERY step, and vacuum never changes reads — " +
-    "the transactional protocol as a checked state machine") {
-    sealed trait Op
-    case class Up(rows: Map[Long, Long], crash: Boolean) extends Op
-    case class Del(ids: Set[Long], crash: Boolean) extends Op
-    case class Comp(b: Int) extends Op
-    val nb = 8
-    val idGen = Gen.chooseNum(1L, 30L)
-    val opGen: Gen[Op] = Gen.frequency(
-      4 -> (for {
-        n <- Gen.chooseNum(0, 5) // empty batches are a legal edge
-        ids <- Gen.listOfN(n, idGen)
-        fps <- Gen.listOfN(n, Gen.chooseNum(1L, 99L))
-        crash <- Gen.prob(0.25)
-      } yield Up(ids.zip(fps).toMap, crash)),
-      3 -> (for {
-        n <- Gen.chooseNum(0, 5)
-        ids <- Gen.listOfN(n, idGen)
-        crash <- Gen.prob(0.25)
-      } yield Del(ids.toSet, crash)),
-      1 -> Gen.chooseNum(0, nb - 1).map(Comp(_)))
-    val gen = Gen.listOfN(5, opGen)
-    def read(dir: String) = graft.ext.StateStore.readAll(spark, dir)
-      .select("pid", "fp").as[(Long, Long)].collect().toMap
-    val prop = forAll(gen) { ops =>
-      val dir = java.nio.file.Files.createTempDirectory("graft_ssprop")
-        .toFile.getAbsolutePath + "/state"
-      var model = (1L to 10L).map(i => i -> i * 7L).toMap
-      graft.ext.Dedup.writeIdKeyedStatePartitioned(
-        model.toSeq.toDF("pid", "fp"), dir, "pid", nb)
-      val stepwise = ops.forall { op =>
-        op match {
-          case Up(rows, crash) =>
-            if (crash) {
-              graft.ext.StateStore.FailPoints.beforeManifestSwap = true
-              try intercept[RuntimeException] {
-                graft.ext.Dedup.upsertIdKeyedStatePartitioned(dir,
-                  rows.toSeq.toDF("pid", "fp"), "pid", nb)
-              } finally
-                graft.ext.StateStore.FailPoints.beforeManifestSwap = false
-              // crashed cycle: model unchanged
-            } else if (rows.nonEmpty) {
-              graft.ext.Dedup.upsertIdKeyedStatePartitioned(dir,
-                rows.toSeq.toDF("pid", "fp"), "pid", nb)
-              model = model ++ rows
-            } else {
-              graft.ext.Dedup.upsertIdKeyedStatePartitioned(dir,
-                Seq.empty[(Long, Long)].toDF("pid", "fp"), "pid", nb)
-            }
-          case Del(ids, crash) =>
-            if (crash) {
-              graft.ext.StateStore.FailPoints.beforeManifestSwap = true
-              try intercept[RuntimeException] {
-                graft.ext.Dedup.retractIdKeyedStatePartitioned(dir,
-                  ids.toSeq.toDF("pid"), "pid", nb)
-              } finally
-                graft.ext.StateStore.FailPoints.beforeManifestSwap = false
-            } else if (ids.nonEmpty) {
-              graft.ext.Dedup.retractIdKeyedStatePartitioned(dir,
-                ids.toSeq.toDF("pid"), "pid", nb)
-              model = model -- ids
-            } else {
-              graft.ext.Dedup.retractIdKeyedStatePartitioned(dir,
-                Seq.empty[Long].toDF("pid"), "pid", nb)
-            }
-          case Comp(b) =>
-            graft.ext.StateStore.compactBucket(spark, dir, b)
-        }
-        read(dir) == model
-      }
-      graft.ext.StateStore.vacuum(spark, dir)
-      stepwise && read(dir) == model
-    }
-    assert(SCTest.check(params, prop).passed)
-  }
-
   test("cluster maintenance on ARBITRARY graphs: upsertClusters == " +
     "fresh dupClusters over corpus ∪ delta pairs, and upsertClusters " +
     "then retractClusters == fresh dupClusters over the retained pair " +

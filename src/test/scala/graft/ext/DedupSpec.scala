@@ -1163,96 +1163,4 @@ class DedupSpec extends SparkSpec {
     assert(newPairs.count() > 0 && deleted.count() > 0)
     assert(cluRows(clusters2).exists { case (id, cl) => id != cl })
   }
-
-  /** pbucket of each candidate value under the SAME pmod(hash(.))
-    * Spark computes — the partitioned-state test picks fixture ids by
-    * their buckets so its pins (untouched byte-stability, emptied
-    * partitions) are non-vacuous by CONSTRUCTION, not by luck of the
-    * hash. */
-  private def bucketsOf(vals: Seq[Long], nb: Int): Map[Long, Int] =
-    vals.toDF("v")
-      .select(col("v"), pmod(hash(col("v")), lit(nb)).as("b"))
-      .as[(Long, Int)].collect().toMap
-
-  test("id-keyed partitioned state (embedding index + fingerprint " +
-    "table): upsert rewrites only the batch ids' buckets (batch wins, " +
-    "idempotent), retraction drops emptied buckets and passes the " +
-    "takedown audit, and every full read equals the in-memory " +
-    "anti-join maintenance == fresh rebuild") {
-    val nb = 16
-    // three corpus vectors + one batch vector, ids chosen so all four
-    // buckets are pairwise distinct (pins non-vacuous)
-    val cands = 1L to 300L
-    val bk = bucketsOf(cands, nb)
-    val Seq(v1, v2, v3, v4) = cands
-      .foldLeft(Seq.empty[Long]) { (acc, v) =>
-        if (acc.size < 4 && !acc.map(bk).contains(bk(v))) acc :+ v
-        else acc
-      }
-    def emb(vid: Long, x: Float) =
-      (vid, Array(x, 1f - x, x / 2, -x))
-    val corpus = Seq(emb(v1, 0.1f), emb(v2, 0.5f), emb(v3, 0.9f))
-      .toDF("vec_id", "embedding")
-    // batch: NEW vector v4 plus a RE-CRAWLED v2 with a changed
-    // embedding (batch must win)
-    val batch = Seq(emb(v4, 0.3f), emb(v2, 0.7f))
-      .toDF("vec_id", "embedding")
-    val bits = 4; val tables = 2
-    val idx0 = SimSearch.corpusEmbeddingLshIndex(corpus, bits, tables)
-      .localCheckpoint(eager = true)
-    val dir = java.nio.file.Files.createTempDirectory("graft_pide")
-      .toFile.getAbsolutePath + "/state"
-    Dedup.writeIdKeyedStatePartitioned(idx0, dir, "vec_id", nb)
-    val before = StateStore.leafFiles(spark, dir)
-    val freshRows = SimSearch.corpusEmbeddingLshIndex(batch, bits,
-      tables)
-    val touched = Dedup.upsertIdKeyedStatePartitioned(dir, freshRows,
-      "vec_id", nb)
-    val after = StateStore.leafFiles(spark, dir)
-    assert(touched.toSet == Set(bk(v2), bk(v4)))
-    // v1/v3's buckets never rewritten
-    Seq(v1, v3).foreach { v =>
-      assert(after(bk(v)) == before(bk(v)))
-    }
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.select(col("vec_id"), col("bucket.t"), col("bucket.bk"))
-        .as[(Long, Int, Long)].collect().toSet
-    val viaMem = rows(SimSearch.upsertEmbeddingIndex(idx0, batch,
-      bits, tables))
-    assert(rows(StateStore.readAll(spark, dir)) == viaMem)
-    // batch wins: v2's buckets come from its NEW embedding only
-    assert(rows(StateStore.readAll(spark, dir)) == rows(
-      SimSearch.corpusEmbeddingLshIndex(
-        corpus.filter(col("vec_id") =!= v2).unionByName(batch),
-        bits, tables)))
-    // idempotent: re-delivering the batch supersedes the same buckets
-    // with identical content
-    Dedup.upsertIdKeyedStatePartitioned(dir, freshRows, "vec_id", nb)
-    assert(rows(StateStore.readAll(spark, dir)) == viaMem)
-    // retraction: v2 leaves; its bucket held only v2's rows -> leaves
-    // the manifest
-    val touchedRet = Dedup.retractIdKeyedStatePartitioned(dir,
-      Seq(v2).toDF("vec_id"), "vec_id", nb)
-    assert(touchedRet == Seq(bk(v2)))
-    assert(!StateStore.leafFiles(spark, dir).contains(bk(v2)))
-    assert(rows(StateStore.readAll(spark, dir)) == rows(
-      SimSearch.corpusEmbeddingLshIndex(
-        corpus.filter(col("vec_id") =!= v2)
-          .unionByName(batch.filter(col("vec_id") =!= v2)),
-        bits, tables)))
-    // schema-genericity: the SAME ops maintain the (pid, fp)
-    // fingerprint table — the other id-keyed state (round-11 verdict
-    // item 4)
-    val fdir = java.nio.file.Files.createTempDirectory("graft_pidf")
-      .toFile.getAbsolutePath + "/state"
-    val fps0 = Seq((v1, 0x00L), (v2, 0x01L)).toDF("pid", "fp")
-    Dedup.writeIdKeyedStatePartitioned(fps0, fdir, "pid", nb)
-    Dedup.upsertIdKeyedStatePartitioned(fdir,
-      Seq((v2, 0x0FL), (v4, 0x03L)).toDF("pid", "fp"), "pid", nb)
-    Dedup.retractIdKeyedStatePartitioned(fdir, Seq(v1).toDF("pid"),
-      "pid", nb)
-    assert(StateStore.readAll(spark, fdir).select("pid", "fp")
-      .as[(Long, Long)].collect().toSet
-      == Set(v2 -> 0x0FL, v4 -> 0x03L))
-  }
 }
