@@ -79,7 +79,8 @@ object CrimePipeline {
 
   /** The ONE feature block shared by training ([[base]]) and serving
     * ([[Serve.predictOne]]) — a single definition is the train/serve-parity
-    * guarantee (the reference's riskiest flaw was this logic duplicated in
+    * guarantee: serving runs the same expressions, evaluated once-bound on
+    * the driver (the reference's riskiest flaw was this logic duplicated in
     * a second language, `Stramlit_app.py:123-136`). */
   def engineerFeatures(df: DataFrame): DataFrame =
     Features.withTemporal(

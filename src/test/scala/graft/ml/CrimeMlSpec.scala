@@ -6,6 +6,7 @@ import org.apache.spark.ml.PipelineModel
 import org.apache.spark.ml.linalg.Vector
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** The reference's entry point 2 (`python xgboost_model.py`, SURVEY.md
   * §3.2) reproduced end-to-end on the crime-shaped fixture: dirty strings →
@@ -22,6 +23,35 @@ class CrimeMlSpec extends SparkSpec {
     EstimatorParity.check(model,
       graft.engine.Sampling.timeSplit(input, col("ts"), 2003)._1,
       train, test, "Crime_Category", Seq("ID", "Location Description"))
+
+  /** `model.transform` compiled for the test schema answers every test
+    * row, and one with an unseen Location Description, as the batch
+    * transform of the same rows does, with the same schema. */
+  private def checkCompiled(model: PipelineModel, test: DataFrame): Unit = {
+    val rows = test.collect().toSeq ++ test.limit(1)
+      .withColumn("Location Description", lit("MOON BASE")).collect()
+    val compiled = Serve.compile(spark, test.schema)(model.transform) match {
+      case Right(c) => c
+      case Left(why) => fail(s"the crime model does not compile: $why")
+    }
+    val got = compiled.transform(spark.createDataFrame(rows.asJava,
+      test.schema)).getOrElse(fail("a local request is not compiled"))
+    val batch = model.transform(spark.createDataFrame(
+      spark.sparkContext.parallelize(rows, 2), test.schema))
+    assert(got.schema == batch.schema)
+    def counts(df: DataFrame): Map[org.apache.spark.sql.Row, Int] =
+      df.collect().toSeq.groupBy(identity).view.mapValues(_.size).toMap
+    val want = counts(batch)
+    assert(want.values.sum == rows.length)
+    assert(counts(got) == want)
+  }
+
+  test("the crime model's transform compiles to its Project chain and " +
+    "equals the batch transform on every test row, including an unseen " +
+    "Location Description") {
+    val (model, _, test) = fitted
+    checkCompiled(model, test)
+  }
 
   test("null Beats survive cleaning and are fill-0'd before assembly " +
     "(XGBoost.py:232-233 residual fillna)") {
@@ -93,6 +123,7 @@ class CrimeMlSpec extends SparkSpec {
       val (model, train, test) =
         CrimePipeline.fitCrime(wide, cutoffYear = 2003)
       checkEstimatorParity(wide, model, train, test)
+      checkCompiled(model, test)
       val nLoc = Evaluation.indexer(model, "Location_Index")
         .labelsArray.head.length
       assert(nLoc >= 161)

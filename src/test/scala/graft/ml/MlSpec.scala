@@ -1,9 +1,14 @@
 package graft.ml
 
 import graft.SparkSpec
+import java.lang.ref.WeakReference
 import org.apache.spark.ml.PipelineModel
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.ml.param.ParamMap
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{Metadata, StructType}
+import scala.jdk.CollectionConverters._
 import CrimePipeline.LabelCol
 
 /** Golden ML invariants (SURVEY.md §5.2): stochastic model ⇒ no exact
@@ -23,6 +28,42 @@ class MlSpec extends SparkSpec {
   private def localRequest(test: DataFrame): DataFrame = {
     val raw = test.select(rawCols.map(col): _*)
     spark.createDataFrame(java.util.List.of(raw.head()), raw.schema)
+  }
+
+  /** `rows` as one local request, as a server builds it from incoming
+    * records. */
+  private def local(rows: Seq[Row], schema: StructType): DataFrame =
+    spark.createDataFrame(rows.asJava, schema)
+
+  /** `rows` as a frame Catalyst cannot fold: it runs as a batch job. */
+  private def nonLocal(rows: Seq[Row], schema: StructType): DataFrame =
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+
+  /** Serves `request`, checking the route it took: the compiled chain
+    * answers with a local relation, the planned route with a plan. */
+  private def serve(model: PipelineModel, request: DataFrame,
+      compiled: Boolean): DataFrame = {
+    val out = Serve.predictOne(spark, model, request, train = null)
+    assert(out.queryExecution.analyzed.isInstanceOf[LocalRelation] ==
+      compiled, s"compiled route expected: $compiled")
+    out
+  }
+
+  private def compiledOrFail(c: Either[String, Serve.Compiled])
+      : Serve.Compiled = c match {
+    case Right(compiled) => compiled
+    case Left(why) => fail(s"the serving plan does not compile: $why")
+  }
+
+  /** Batch answers of `model` for raw rows: the feature block and
+    * `model.transform` run as a job, the label looked up on the driver. */
+  private def batchAnswers(model: PipelineModel, rows: Seq[Row],
+      schema: StructType): Seq[Row] = {
+    val labels = Evaluation.labelMapping(model).toMap
+    model.transform(CrimePipeline.engineerFeatures(nonLocal(rows, schema))
+        .withColumn("weight", lit(1.0)))
+      .select("probability", "prediction").collect().toSeq
+      .map(r => Row(labels(r.getDouble(1).toInt), r.get(0), r.get(1)))
   }
 
   /** Runs `f` with a listener attached: the jobs it starts, and the
@@ -237,12 +278,15 @@ class MlSpec extends SparkSpec {
       "folds through the fitted stages without touching training data") {
     val (model, _, test) = fitted
     val request = localRequest(test)
+    // a model the memo has not seen: the first call compiles in the count
+    val fresh = model.copy(ParamMap.empty)
     val (jobs, _) = observe {
-      val served = Serve.predictOne(spark, model, request, train = null)
-        .collect()
-      assert(served.length == 1)
+      for (_ <- 1 to 2) {
+        val served = serve(fresh, request, compiled = true).collect()
+        assert(served.length == 1)
+      }
     }
-    assert(jobs == 0, s"$jobs jobs for one served row")
+    assert(jobs == 0, s"$jobs jobs for two served rows")
   }
 
   test("the per-class report runs one confusion-matrix aggregation: at " +
@@ -382,5 +426,148 @@ class MlSpec extends SparkSpec {
     assert(counts(byJoin) == Map(0 -> 3L, 1 -> 3L, 2 -> 2L, 3 -> 1L, 4 -> 0L,
       5 -> 0L))
     assert(counts(byStage) == counts(byJoin))
+  }
+
+  test("compiled serving equals the planned route: every test row as a " +
+      "one-row local request, one multi-row request, and unseen and null " +
+      "keys; the same schema, metadata included") {
+    val (model, _, test) = fitted
+    val raw = test.select(rawCols.map(col): _*)
+    val schema = raw.schema
+    val rows = raw.collect().toSeq
+    def edited(updates: (String, Any)*): Row = {
+      val m = updates.toMap
+      Row.fromSeq(schema.fieldNames.toSeq.map(n =>
+        m.getOrElse(n, rows.head.getAs[Any](n))))
+    }
+    val odd = Seq(edited("l_partkey" -> -1L, "l_suppkey" -> -1L),
+      edited("l_suppkey" -> null), edited("p_brand" -> null))
+    val all = rows ++ odd
+    // the planned route answers row by row, so one multi-row request
+    // answers each row as a one-row request does (checked on a sample)
+    val planned = Serve.planned(model, local(all, schema))
+    val want = planned.collect().toSeq
+    for (i <- (0 until 3) ++ all.indices.takeRight(odd.length))
+      assert(Serve.planned(model, local(Seq(all(i)), schema)).collect()
+        .toSeq == Seq(want(i)), s"row $i")
+    val got = all.map { r =>
+      val out = serve(model, local(Seq(r), schema), compiled = true)
+      assert(out.schema == planned.schema)
+      out.collect().toSeq match { case Seq(one) => one }
+    }
+    def differ(rs: Seq[Row]): Int = all.indices.count(i => rs(i) != want(i))
+    assert(differ(got) == 0, s"${differ(got)} of ${all.length} rows differ")
+    val multi = serve(model, local(all, schema), compiled = true).collect()
+    assert(multi.length == all.length && differ(multi.toSeq) == 0,
+      s"${differ(multi.toSeq)} rows of the multi-row request differ")
+    assert(planned.schema.exists(_.metadata != Metadata.empty))
+
+    // unseen keys count 0, a null key counts 0, a null brand indexes to
+    // the keep bucket: through the generic compile of the feature stages,
+    // and equal to the batch job over the same rows
+    val featureCols = Seq("supp_density", "part_density", "brand_idx",
+      "prediction").map(col)
+    val features = compiledOrFail(Serve.compile(spark, schema)(r =>
+      model.transform(CrimePipeline.engineerFeatures(r)
+        .withColumn("weight", lit(1.0)))))
+    val f = features.transform(local(odd, schema)).get
+      .select(featureCols: _*).collect()
+    val keep = Evaluation.indexer(model, "brand_idx").labelsArray.head.length
+    assert(f(0).getLong(0) == 0L && f(0).getLong(1) == 0L)
+    assert(f(1).getLong(0) == 0L && f(1).getLong(1) > 0L)
+    assert(f(2).getDouble(2) == keep.toDouble)
+    assert(f.toSeq == model.transform(CrimePipeline.engineerFeatures(
+        nonLocal(odd, schema)).withColumn("weight", lit(1.0)))
+      .select(featureCols: _*).collect().toSeq)
+    assert(got.takeRight(odd.length) == batchAnswers(model, odd, schema))
+  }
+
+  test("the serving plan compiles to a Project chain, once per model and " +
+      "schema, and again under a changed session configuration; other " +
+      "plan shapes are refused") {
+    val (model, _, test) = fitted
+    val schema = test.select(rawCols.map(col): _*).schema
+    val first = compiledOrFail(Serve.compiled(spark, model, schema))
+    assert(Serve.compiled(spark, model, schema).toOption.exists(_ eq first))
+    val tz = "spark.sql.session.timeZone"
+    val before = spark.conf.get(tz)
+    spark.conf.set(tz, "America/Chicago")
+    try assert(Serve.compiled(spark, model, schema).toOption
+      .exists(c => !(c eq first)))
+    finally spark.conf.set(tz, before)
+    def refused(f: DataFrame => DataFrame): String =
+      Serve.compile(spark, schema)(f).swap.getOrElse(fail("compiled"))
+    assert(refused(_.filter(col("l_quantity") > 0)).contains("Filter"))
+    assert(refused(_.withColumn("r", rand(1))).contains("nondeterministic"))
+    assert(refused(_.withColumn("t", current_timestamp()))
+      .contains("current time"))
+  }
+
+  test("the serving memo follows the model: two models served in turn " +
+      "each give their own batch answers") {
+    val (modelA, _, test) = fitted
+    val (modelB, _, _) = CrimePipeline.fit(spark, sf0001, cutoffYear = 1996)
+    val raw = test.select(rawCols.map(col): _*)
+    val rows = raw.collect().toSeq.take(12)
+    val batch = Seq(modelA, modelB).map(m => batchAnswers(m, rows, raw.schema))
+    assert(batch(0) != batch(1), "the two models must answer differently")
+    for ((r, i) <- rows.zipWithIndex; _ <- 1 to 2;
+        (m, answers) <- Seq(modelA, modelB).zip(batch))
+      assert(serve(m, local(Seq(r), raw.schema), compiled = true).collect()
+        .toSeq == Seq(answers(i)), s"row $i")
+  }
+
+  test("the serving memo keeps no dropped model alive: the model is " +
+      "collectable while it is memoized, its stages once another model " +
+      "is served") {
+    val (model, _, test) = fitted
+    val request = localRequest(test)
+    def cleared(refs: WeakReference[_]*): Boolean = {
+      var i = 0
+      while (refs.exists(_.get != null) && i < 20) {
+        System.gc(); Thread.sleep(50); i += 1
+      }
+      refs.forall(_.get == null)
+    }
+    def serveCopy(): (WeakReference[PipelineModel], WeakReference[AnyRef]) = {
+      val copy = model.copy(ParamMap.empty)
+      serve(copy, request, compiled = true).collect()
+      (new WeakReference(copy), new WeakReference(copy.stages.last))
+    }
+    val (copyRef, forestRef) = serveCopy()
+    assert(cleared(copyRef), "the memo keeps the served model reachable")
+    serve(model, request, compiled = true).collect()
+    assert(cleared(forestRef), "the memo keeps a replaced model's stages")
+  }
+
+  test("concurrent serving: 4 threads x 25 requests against one model " +
+      "give the sequential answers; a non-local request takes the planned " +
+      "route and matches") {
+    import java.util.concurrent.{Callable, Executors, TimeUnit}
+    val (model, _, test) = fitted
+    val raw = test.select(rawCols.map(col): _*)
+    val rows = raw.collect().toSeq.take(25)
+    def answer(r: Row): Row =
+      serve(model, local(Seq(r), raw.schema), compiled = true).collect().head
+    val sequential = rows.map(answer)
+    val pool = Executors.newFixedThreadPool(4)
+    try {
+      val futures = (0 until 4).map { t =>
+        pool.submit(new Callable[Seq[(Int, Row)]] {
+          def call(): Seq[(Int, Row)] = rows.indices.map { i =>
+            val j = (i + 7 * t) % rows.length
+            j -> answer(rows(j))
+          }
+        })
+      }
+      val got = futures.flatMap(_.get(120, TimeUnit.SECONDS))
+      assert(got.length == 100)
+      got.foreach { case (j, row) => assert(row == sequential(j), s"row $j") }
+    } finally pool.shutdownNow()
+
+    val oneRaw = raw.limit(1)
+    val viaPlan = serve(model, oneRaw, compiled = false).collect().toSeq
+    assert(viaPlan == serve(model, local(Seq(oneRaw.head()), raw.schema),
+      compiled = true).collect().toSeq)
   }
 }
