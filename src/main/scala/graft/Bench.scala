@@ -233,7 +233,7 @@ object Bench {
       .config("spark.sql.shuffle.partitions", cpus)
       // every fixture-loading session pins UTC: Tables.normalize's
       // Date→Timestamp / NTZ widenings and q183's ts→double cast are
-      // value-exact only under a fixed session zone (Verify/PlanDump/
+      // value-exact only under a fixed session zone (Verify/Profile/
       // SparkSpec already pin it; a non-UTC bench host would otherwise
       // shift those casts by the host offset)
       .config("spark.sql.session.timeZone", "UTC")

@@ -861,8 +861,9 @@ private[graft] trait ExtQueriesQ222 extends ExtQueriesShared {
     * singletons, maintenance cost carried by the index/banding
     * machinery rather than a dense pair graph). The old 0.25
     * operating point admitted a 2.2%-dense adversarial pair graph —
-    * a stress regime, still measured, as [[graft.ScaleProbe]]'s
-    * opt-in `q259d_emb_dense_chain` cell. */
+    * a stress regime, measured by the retired scale probe's
+    * `q259d_emb_dense_chain` cell (SCALEPROBE_r18.json, a historical
+    * record). */
   private[graft] val q259: Q = (s, d) => {
     // stage 1 — persisted corpus state (q245 owner)
     val (index0, pairs0, clusters0) = sharedEmbState(s, d)

@@ -415,8 +415,9 @@ private[graft] trait ExtQueriesShared {
     * whatever genuinely co-clusters), where the old 0.25 admitted a
     * 2.2%-dense adversarial pair graph that made q259 the suite's top
     * cost while measuring a fixture regime, not the production one.
-    * The dense 0.25 chain stays measured as [[graft.ScaleProbe]]'s
-    * opt-in `q259d_emb_dense_chain` stress cell. The INDEX member is
+    * The dense 0.25 chain was measured as the retired scale probe's
+    * `q259d_emb_dense_chain` stress cell (SCALEPROBE_r18.json, a
+    * historical record). The INDEX member is
     * threshold-free (bucketing only), so q245/q255/q256 are
     * untouched by the re-scope. */
   private[graft] def sharedEmbState(s: SparkSession, d: String)
@@ -686,12 +687,8 @@ private[graft] trait ExtQueriesShared {
 
   /** The q259 five-stage EMBEDDING lifecycle (stages 2–4),
     * parameterized over the stage-1 state and the (threshold, bits,
-    * tables) operating point — shared VERBATIM by q259 (the persisted
-    * [[sharedEmbState]] at the q60/q245 parameters) and
-    * [[graft.ScaleProbe]]'s sparse-regime cells (inline state at the
-    * sparse threshold), so the sparse measurement times exactly the
-    * oracle-checked chain plan rather than a re-derivation that could
-    * drift. */
+    * tables) operating point; q259 runs it over the persisted
+    * [[sharedEmbState]] at the q60/q245 parameters. */
   private[graft] def embLifecycleChain(emb: DataFrame,
       index0: DataFrame, corpusPairs0: DataFrame, clusters0: DataFrame,
       threshold: Double, bits: Int, tables: Int): DataFrame = {
@@ -737,10 +734,8 @@ private[graft] trait ExtQueriesShared {
 
   /** The q260 five-stage PAYLOAD lifecycle (stages 2–4), parameterized
     * over the stage-1 state and the fingerprint operating point —
-    * [[embLifecycleChain]]'s sibling, shared VERBATIM by q260 (the
-    * persisted [[sharedFingerprintState]] at the q237/q250 parameters)
-    * and [[graft.ScaleProbe]]'s sparse-regime cells (inline state at
-    * the width-scaled fingerprint the production dial prescribes). */
+    * [[embLifecycleChain]]'s sibling; q260 runs it over the persisted
+    * [[sharedFingerprintState]] at the q237/q250 parameters. */
   private[graft] def fpLifecycleChain(docs: DataFrame,
       index0: DataFrame, cfps: DataFrame, corpusPairs0: DataFrame,
       clusters0: DataFrame,

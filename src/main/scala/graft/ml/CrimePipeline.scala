@@ -1,8 +1,8 @@
 package graft.ml
 
-import org.apache.spark.ml.{Pipeline, PipelineModel, PipelineStage}
+import org.apache.spark.ml.{Pipeline, PipelineModel}
 import org.apache.spark.ml.classification.RandomForestClassifier
-import org.apache.spark.ml.feature.{StringIndexer, StringIndexerModel, VectorAssembler}
+import org.apache.spark.ml.feature.{StringIndexerModel, VectorAssembler}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
@@ -139,21 +139,6 @@ object CrimePipeline {
   def withClassWeights(df: DataFrame, train: DataFrame): DataFrame =
     attachWeights(df, classWeightTable(train, LabelCol), LabelCol)
 
-  /** The boosted variant's feature stages as estimators: the category
-    * StringIndexer (freq-ordered, handleInvalid=keep, M1 — unseen
-    * serve-time values get the extra index), then the label StringIndexer
-    * (M2) and the VectorAssembler (M9). The forest recipes build the same
-    * indexers from their fused counts ([[trainStats]]). */
-  private def featureStages(r: Recipe): Array[PipelineStage] =
-    Array(
-      new StringIndexer()
-        .setInputCol(r.indexIn).setOutputCol(r.indexOut)
-        .setStringOrderType("frequencyDesc").setHandleInvalid("keep"),
-      new StringIndexer()
-        .setInputCol(r.label).setOutputCol("label")
-        .setStringOrderType("frequencyDesc").setHandleInvalid("error"),
-      assembler(r))
-
   private def assembler(r: Recipe): VectorAssembler =
     new VectorAssembler()
       .setInputCols(r.featureCols.toArray).setOutputCol("features")
@@ -258,88 +243,6 @@ object CrimePipeline {
     val train = prep(trainRaw)
     val test = prep(testRaw)
     (fitForest(r, stats, train), train, test)
-  }
-
-  /** Boosted-trees variant (M5's gradient-boosting parity path,
-    * SURVEY.md §7.5.1): MLlib's GBTClassifier is binary-only, so multiclass
-    * goes through OneVsRest. Early stopping (M10, `XGBoost.py:296`) has no
-    * exact MLlib analogue; the closest surface — exercised when
-    * `validationIndicatorCol` is set — is GBT's validationIndicatorCol +
-    * validationTol, which stops adding trees once validation-loss
-    * improvement drops below the tolerance (documented semantic gap:
-    * per-binary-problem validation rather than global multiclass
-    * mlogloss). */
-  def boostedPipeline(seed: Long = 42L, maxIter: Int = 20,
-      validationIndicatorCol: Option[String] = None,
-      validationTol: Double = 0.01): Pipeline = {
-    import org.apache.spark.ml.classification.{GBTClassifier, OneVsRest}
-    val gbt = new GBTClassifier()
-      .setLabelCol("label").setFeaturesCol("features")
-      .setWeightCol("weight")
-      .setMaxIter(maxIter).setMaxDepth(5).setStepSize(0.1).setSeed(seed)
-    validationIndicatorCol.foreach { c =>
-      // validationTol has no dedicated setter on GBTClassifier
-      gbt.setValidationIndicatorCol(c).set(gbt.validationTol, validationTol)
-    }
-    val ovr = new OneVsRest().setClassifier(gbt)
-      .setLabelCol("label").setFeaturesCol("features")
-      .setWeightCol("weight")
-    new Pipeline().setStages(featureStages(Lineitem) :+ ovr)
-  }
-
-  /** GLOBAL early stopping for the boosted variant (M10,
-    * `XGBoost.py:291-298`): the reference monitors one GLOBAL multiclass
-    * validation mlogloss per boosting round and keeps the best round;
-    * GBT's `validationIndicatorCol` (the other M10 surface, exercised in
-    * MlSpec) stops each OneVsRest binary problem independently. This
-    * measured analogue restores the global criterion:
-    *
-    *  1. fit OneVsRest(GBT) ONCE at `maxIter` trees;
-    *  2. per class c, score the validation rows with
-    *     `evaluateEachIteration` — the per-round binary validation loss
-    *     curve from a single trained model (no ladder retraining);
-    *  3. the global round-i criterion is Σ_c loss_c(i) — the OneVsRest
-    *     total validation objective (documented approximation: the sum of
-    *     binary logistic losses, not softmax mlogloss; the softmax
-    *     validation mlogloss of the PICKED model is reported via
-    *     [[Evaluation.ovrLogLoss]]);
-    *  4. pick the EARLIEST round minimizing the criterion (the
-    *     reference's best_iteration tie rule) and refit at that tree
-    *     count (MLlib models cannot be truncated in place).
-    *
-    * Returns (bestRound, global per-round validation curve, model fitted
-    * at bestRound). Cost: 2 fits + |classes| curve evaluations — vs the
-    * reference's 1 fit, the price of the OneVsRest decomposition. */
-  def globalEarlyStopping(train: DataFrame, validation: DataFrame,
-      maxIter: Int = 20, seed: Long = 42L)
-      : (Int, Seq[Double], PipelineModel) = {
-    import org.apache.spark.ml.classification.{GBTClassificationModel, OneVsRestModel}
-    val full = boostedPipeline(seed = seed, maxIter = maxIter).fit(train)
-    // featurize validation through every stage but the classifier
-    val featured = full.stages.init
-      .foldLeft(validation)((df, st) => st.transform(df))
-      .localCheckpoint(eager = true) // scored |classes| times
-    val ovr = full.stages.last.asInstanceOf[OneVsRestModel]
-    val curves = ovr.models.zipWithIndex.map { case (m, c) =>
-      val g = m.asInstanceOf[GBTClassificationModel]
-      // evaluateEachIteration resolves the model's OWN column params: the
-      // label col is OneVsRest's internal binarized name (mc2b$…), and the
-      // weight col rides along because the pipeline trains weighted
-      val binary = featured.select(
-        col(g.getFeaturesCol),
-        when(col("label") === c.toDouble, 1.0).otherwise(0.0)
-          .as(g.getLabelCol),
-        col(g.getWeightCol))
-      g.evaluateEachIteration(binary)
-    }
-    require(curves.forall(_.length == curves.head.length),
-      "per-class curves must align per boosting round")
-    val global = curves.transpose.map(_.sum).toSeq
-    val best = global.zipWithIndex.minBy { case (v, i) => (v, i) }._2 + 1
-    val model =
-      if (best == maxIter) full
-      else boostedPipeline(seed = seed, maxIter = best).fit(train)
-    (best, global, model)
   }
 
   /** End-to-end fit: engineer → split → train-only stats → weights → fit.

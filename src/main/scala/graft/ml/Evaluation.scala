@@ -65,23 +65,15 @@ object Evaluation {
       .map { case (name, t) => StructField(name, t, nullable = false) })
 
   /** Feature importances zipped with names (M8, `XGBoost.py:314-320`).
-    * For the OneVsRest boosted variant, importances are averaged over the
-    * per-class binary GBT models. Feature names come from the pipeline's
-    * own VectorAssembler stage (NOT a hardcoded list) so a model with a
-    * different feature recipe — e.g. the crime recipe's 18 columns — can never be
-    * silently mislabeled by zip truncation. */
+    * Feature names come from the pipeline's own VectorAssembler stage
+    * (NOT a hardcoded list) so a model with a different feature recipe —
+    * e.g. the crime recipe's 18 columns — can never be silently
+    * mislabeled by zip truncation. */
   def featureImportances(model: PipelineModel): Seq[(String, Double)] = {
-    import org.apache.spark.ml.classification.{GBTClassificationModel, OneVsRestModel}
     import org.apache.spark.ml.feature.VectorAssembler
     val imp: Array[Double] = model.stages.last match {
       case rf: RandomForestClassificationModel =>
         rf.featureImportances.toArray
-      case ovr: OneVsRestModel =>
-        val per = ovr.models.collect {
-          case g: GBTClassificationModel => g.featureImportances.toArray
-        }
-        require(per.nonEmpty, "no tree models inside OneVsRest")
-        per.transpose.map(_.sum / per.length)
       case other => throw new IllegalArgumentException(
         s"unsupported final stage for importances: ${other.getClass}")
     }
@@ -93,43 +85,6 @@ object Evaluation {
       s"feature name/importance arity mismatch: ${names.length} names " +
         s"vs ${imp.length} importances")
     names.zip(imp).sortBy(-_._2)
-  }
-
-  /** Global multiclass validation log-loss for the OneVsRest(GBT) model
-    * (the metric `XGBoost.py:296` early-stops on): each binary model's
-    * positive-class probability, softmax-style normalized across classes
-    * into a softprob vector — the standard OneVsRest probability
-    * combination, mirroring multi:softprob's normalization — then
-    * −mean(log p_true) with the usual 1e-15 clip. Unweighted mean
-    * (the reference's eval_metric default). */
-  def ovrLogLoss(model: PipelineModel, data: DataFrame): Double = {
-    import org.apache.spark.ml.classification.{GBTClassificationModel, OneVsRestModel}
-    import org.apache.spark.ml.functions.vector_to_array
-    import org.apache.spark.ml.param.ParamMap
-    val ovr = model.stages.last match {
-      case o: OneVsRestModel => o
-      case other => throw new IllegalArgumentException(
-        s"ovrLogLoss needs a OneVsRest final stage, got ${other.getClass}")
-    }
-    val featured = model.stages.init
-      .foldLeft(data)((df, st) => st.transform(df))
-    val scored = ovr.models.zipWithIndex.foldLeft(featured) {
-      case (df, (m, c)) =>
-        val g = m.copy(ParamMap.empty).asInstanceOf[GBTClassificationModel]
-          .setPredictionCol(s"__pred_$c")
-          .setRawPredictionCol(s"__raw_$c")
-          .setProbabilityCol(s"__prob_$c")
-        g.transform(df)
-    }
-    val k = ovr.models.length
-    val probs = array(
-      (0 until k).map(c => vector_to_array(col(s"__prob_$c"))(1)): _*)
-    scored.select(
-        (-log(greatest(
-          element_at(probs, col("label").cast("int") + 1) /
-            aggregate(probs, lit(0.0), (a, v) => a + v),
-          lit(1e-15)))).as("ll"))
-      .agg(avg(col("ll"))).head().getDouble(0)
   }
 
   /** The pipeline's fitted StringIndexerModel that writes `outputCol`,

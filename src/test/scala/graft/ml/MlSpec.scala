@@ -202,69 +202,6 @@ class MlSpec extends SparkSpec {
     assert(served == batch)
   }
 
-  test("boosted variant (OneVsRest GBT) fits and predicts all classes") {
-    val (_, train, test) = fitted
-    val model = CrimePipeline.boostedPipeline(maxIter = 5).fit(train)
-    val preds = model.transform(test)
-    val acc = Evaluation.accuracy(preds)
-    val majority = preds.groupBy("label").count()
-      .agg(max("count")).head().getLong(0).toDouble / preds.count()
-    assert(acc >= majority - 0.05, s"acc=$acc majority=$majority")
-    assert(preds.select("prediction").distinct().count() >= 2)
-    // importances must work for the OneVsRest(GBT) shape too (regression)
-    val imp = Evaluation.featureImportances(model)
-    assert(imp.length == CrimePipeline.FeatureCols.length)
-    assert(math.abs(imp.map(_._2).sum - 1.0) < 1e-6)
-  }
-
-  test("M10 surface: GBT validationIndicatorCol trains within budget " +
-      "and predicts") {
-    val (_, train, _) = fitted
-    // hold out the last train year as the per-binary-problem validation
-    // split — the closest MLlib analogue of the reference's early stopping
-    val withVal = train.withColumn("is_val", col("d_year") === 1997)
-    val model = CrimePipeline.boostedPipeline(maxIter = 5,
-      validationIndicatorCol = Some("is_val")).fit(withVal)
-    val ovr = model.stages.last
-      .asInstanceOf[org.apache.spark.ml.classification.OneVsRestModel]
-    val trees = ovr.models.collect {
-      case g: org.apache.spark.ml.classification.GBTClassificationModel =>
-        g.getNumTrees
-    }
-    assert(trees.nonEmpty)
-    // validation stopping may end a binary problem before maxIter but can
-    // never exceed it
-    assert(trees.forall(t => t > 0 && t <= 5), trees.mkString(","))
-    val preds = model.transform(withVal.filter(col("is_val")))
-    assert(preds.count() > 0)
-    assert(preds.select("prediction").distinct().count() >= 2)
-  }
-
-  test("M10 global early stopping: pick ≤ max, pick is the argmin of the " +
-      "global validation curve, curve strictly improves up to the pick") {
-    val (_, train, test) = fitted
-    val (best, curve, model) =
-      CrimePipeline.globalEarlyStopping(train, test, maxIter = 6)
-    assert(curve.length == 6)
-    assert(best >= 1 && best <= 6)
-    // the pick IS the global-criterion minimum…
-    assert(curve(best - 1) == curve.min)
-    // …and the earliest such round (no prior round ties or beats it) —
-    // the validation metric is non-increasing at the pick
-    assert(curve.take(best - 1).forall(_ > curve(best - 1)))
-    // the refitted model carries exactly `best` trees per binary problem
-    val ovr = model.stages.last
-      .asInstanceOf[org.apache.spark.ml.classification.OneVsRestModel]
-    val trees = ovr.models.collect {
-      case g: org.apache.spark.ml.classification.GBTClassificationModel =>
-        g.getNumTrees
-    }
-    assert(trees.nonEmpty && trees.forall(_ == best), trees.mkString(","))
-    // the reported metric at the pick: global softmax mlogloss, finite
-    val mll = Evaluation.ovrLogLoss(model, test)
-    assert(mll > 0.0 && java.lang.Double.isFinite(mll), s"mlogloss=$mll")
-  }
-
   test("no test-leakage: density stats computed from train only") {
     val (_, train, test) = fitted
     // a suppkey present only in test must get density 0 (filled), never >0
